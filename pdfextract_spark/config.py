@@ -83,12 +83,9 @@ class EngineConfig:
     char_aspect: float = 0.5                    # char width = aspect * font size
 
     # ---- Spark execution ----
-    shuffle_partitions: int = 32
-    arrow_max_records_per_batch: int = 2_000
-    # spans-per-doc above which a doc is size-banded into the "oversized"
-    # partition group and page-split before extraction (skew handling)
+    # spans-per-doc above which pipeline.run_extraction routes a doc through
+    # the page-parallel operator (skew handling)
     oversize_span_threshold: int = 4_000
-    salt_buckets: int = 16
 
 
 CONFIG = EngineConfig()

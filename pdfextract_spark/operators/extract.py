@@ -11,10 +11,10 @@ Scale design:
 - ``repartition`` (optional) only to balance batch sizes across executors —
   at cluster scale prefer a well-bucketed input table over a runtime shuffle
 - skewed oversized docs: the corpus has a ~0.1% band of ~100x docs;
-  ``split_oversized`` splits their span arrays into page-sized chunks that are
-  extracted independently and re-sequenced (pages are independent until the
-  final per-doc ordering — SURVEY.md §7 known-hard #4). Round 1 keeps them
-  whole; the banding hook is here.
+  pipeline.run_extraction routes documents above
+  ``cfg.oversize_span_threshold`` spans through the page-parallel operator
+  (operators/extract_paged.py) instead of this one, so one huge document
+  fans out over (doc_id, page) rather than stalling a task.
 - per-doc failures are quarantined, not fatal (TextExtractor.java:124-131
   analog): errors become rows in a quarantine output with kind='error'.
 """
@@ -63,6 +63,13 @@ def _spans_to_lists(spans) -> tuple:
     return kinds, texts, refs, offs
 
 
+def error_row(doc_id: str, text: str) -> dict:
+    """The one output row of a quarantined document (both operators)."""
+    return {"doc_id": doc_id, "seq": -1, "kind": "error", "text": text,
+            "media_ref": "", "offset": -1, "page": -1, "para": -1,
+            "style_ref": ""}
+
+
 def words_as_rows(words: tuple) -> list:
     """OutSpan.words tuple -> Arrow-friendly list of struct dicts."""
     return [
@@ -85,15 +92,9 @@ def extract_batch(
                 doc_id, kinds, texts, refs, offs, cfg, emit_words=with_words
             )
         except Exception as exc:  # quarantine, never fail the task
-            out["doc_id"].append(doc_id)
-            out["seq"].append(-1)
-            out["kind"].append("error")
-            out["text"].append(f"{type(exc).__name__}: {exc}")
-            out["media_ref"].append("")
-            out["offset"].append(-1)
-            out["page"].append(-1)
-            out["para"].append(-1)
-            out["style_ref"].append("")
+            row = error_row(doc_id, f"{type(exc).__name__}: {exc}")
+            for c in _OUT_COLS:
+                out[c].append(row[c])
             words_col.append([])
             continue
         for sp in result:

@@ -54,17 +54,14 @@ from ..engine.vectorized import (
     _WordTable,
 )
 from ..layout import MediaBox, doc_styles, layout_document
-from ..operators.extract import OUTPUT_SCHEMA, OUTPUT_SCHEMA_WORDS, _spans_to_lists
+from ..operators.extract import (
+    OUTPUT_SCHEMA, OUTPUT_SCHEMA_WORDS, _spans_to_lists, error_row,
+)
 from ..oracle.scanfilters import apply_scan_filters
 
-# ONE ROW PER (doc, page), char/media fields packed as arrays. The first
-# revision shipped one row PER CHARACTER here; a 1M-char document then paid
-# Arrow + shuffle costs on 10^6 13-field rows twice (repartition + groupBy),
-# which more than cancelled the page-parallel analysis win (measured: the
-# paged band was 1.3x SLOWER than whole-doc routing on a 2000x-amplified
-# soak). Packing makes shuffle rows = pages, and — since a packed row IS a
-# complete page group — stage B becomes mapInPandas with NO groupBy: one
-# shuffle fewer.
+# ONE ROW PER (doc, page), char/media fields packed as arrays: shuffle rows
+# are pages, not chars (see the module docstring), and since a packed row IS
+# a complete page group, stage B is mapInPandas with NO groupBy.
 PAGE_CHAR_SCHEMA = (
     "doc_id string, page int, x array<float>, y array<float>, w array<float>, "
     "h array<float>, baseline array<float>, style_idx array<int>, "
@@ -72,6 +69,9 @@ PAGE_CHAR_SCHEMA = (
     "mx array<float>, my array<float>, mw array<float>, mh array<float>, "
     "mref array<string>, moff array<int>"
 )
+
+# every packed field null: the base of a quarantined document's page -1 row
+_NO_PAGE = dict.fromkeys(f.split()[0] for f in PAGE_CHAR_SCHEMA.split(", "))
 
 PAGE_SCHEMA = (
     "doc_id string, page int, rkind string, a int, b int, c int, "
@@ -89,57 +89,69 @@ _EMPTY = {
 
 def _stage_a(batches: Iterator[pd.DataFrame], cfg: EngineConfig) -> Iterator[pd.DataFrame]:
     """Per doc: tokenize + doc-local scan filters -> packed per-page rows.
-    Char order within each page is the table order (the narrow path's 'ord'),
-    preserved because the page mask is applied to an already-ordered table;
-    media is packed sorted by offset (what stage B's sort_values did)."""
+    A failing doc is quarantined as one page -1 row with the error text in
+    `chars`; stages B and C pass it through as the doc's one error row."""
     for pdf in batches:
         rows: List[dict] = []
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            kinds, texts, refs, offs = _spans_to_lists(spans)
-            order = np.argsort(np.asarray(offs, dtype=np.int64), kind="stable")
-            kinds = [kinds[i] for i in order]
-            texts = [texts[i] for i in order]
-            refs = [refs[i] for i in order]
-            offs = [int(offs[i]) for i in order]
-            table, media, styles = layout_document(doc_id, kinds, texts, refs, offs, cfg)
-            table = apply_scan_filters(table, styles, cfg)
-            media_by_page: Dict[int, list] = {}
-            for m in media:
-                media_by_page.setdefault(int(m.page), []).append(m)
-            chars = np.asarray(table.char, dtype=object)
-            # ONE stable argsort groups chars by page while preserving the
-            # in-page table order (a per-page boolean mask would be
-            # O(pages x chars) — ~10s for a 1k-page doc; this is O(n log n))
-            order = np.argsort(table.page, kind="stable")
-            sorted_pages = table.page[order]
-            page_vals = np.unique(sorted_pages)
-            starts = np.searchsorted(sorted_pages, page_vals, side="left")
-            ends = np.searchsorted(sorted_pages, page_vals, side="right")
-            slices = {
-                int(p): order[s:e] for p, s, e in zip(page_vals, starts, ends)
-            }
-            empty = np.empty(0, dtype=np.int64)
-            for p in sorted(set(slices) | set(media_by_page)):
-                idx = slices.get(p, empty)
-                ms = sorted(media_by_page.get(p, []), key=lambda m: m.offset)
-                rows.append({
-                    "doc_id": doc_id,
-                    "page": int(p),
-                    "x": table.x[idx], "y": table.y[idx],
-                    "w": table.w[idx], "h": table.h[idx],
-                    "baseline": table.baseline[idx],
-                    "style_idx": table.style_idx[idx].astype(np.int32),
-                    "chars": chars[idx].tolist(),
-                    "off": table.offset[idx].astype(np.int32),
-                    "mx": np.array([m.x for m in ms], dtype=np.float32),
-                    "my": np.array([m.y for m in ms], dtype=np.float32),
-                    "mw": np.array([m.w for m in ms], dtype=np.float32),
-                    "mh": np.array([m.h for m in ms], dtype=np.float32),
-                    "mref": [m.media_ref for m in ms],
-                    "moff": np.array([m.offset for m in ms], dtype=np.int32),
-                })
+            try:
+                rows.extend(_pack_pages(doc_id, spans, cfg))
+            except Exception as exc:  # quarantine, never fail the task
+                rows.append(dict(_NO_PAGE, doc_id=doc_id, page=-1,
+                                 chars=[f"{type(exc).__name__}: {exc}"]))
         if rows:
             yield pd.DataFrame(rows)
+
+
+def _pack_pages(doc_id: str, spans, cfg: EngineConfig) -> List[dict]:
+    """Char order within each page is the table order (the narrow path's
+    'ord'), preserved because the page mask is applied to an already-ordered
+    table; media is packed sorted by offset (what stage B's sort_values did)."""
+    kinds, texts, refs, offs = _spans_to_lists(spans)
+    order = np.argsort(np.asarray(offs, dtype=np.int64), kind="stable")
+    kinds = [kinds[i] for i in order]
+    texts = [texts[i] for i in order]
+    refs = [refs[i] for i in order]
+    offs = [int(offs[i]) for i in order]
+    table, media, styles = layout_document(doc_id, kinds, texts, refs, offs, cfg)
+    table = apply_scan_filters(table, styles, cfg)
+    media_by_page: Dict[int, list] = {}
+    for m in media:
+        media_by_page.setdefault(int(m.page), []).append(m)
+    chars = np.asarray(table.char, dtype=object)
+    # ONE stable argsort groups chars by page while preserving the
+    # in-page table order (a per-page boolean mask would be
+    # O(pages x chars) — ~10s for a 1k-page doc; this is O(n log n))
+    order = np.argsort(table.page, kind="stable")
+    sorted_pages = table.page[order]
+    page_vals = np.unique(sorted_pages)
+    starts = np.searchsorted(sorted_pages, page_vals, side="left")
+    ends = np.searchsorted(sorted_pages, page_vals, side="right")
+    slices = {
+        int(p): order[s:e] for p, s, e in zip(page_vals, starts, ends)
+    }
+    empty = np.empty(0, dtype=np.int64)
+    rows: List[dict] = []
+    for p in sorted(set(slices) | set(media_by_page)):
+        idx = slices.get(p, empty)
+        ms = sorted(media_by_page.get(p, []), key=lambda m: m.offset)
+        rows.append({
+            "doc_id": doc_id,
+            "page": int(p),
+            "x": table.x[idx], "y": table.y[idx],
+            "w": table.w[idx], "h": table.h[idx],
+            "baseline": table.baseline[idx],
+            "style_idx": table.style_idx[idx].astype(np.int32),
+            "chars": chars[idx].tolist(),
+            "off": table.offset[idx].astype(np.int32),
+            "mx": np.array([m.x for m in ms], dtype=np.float32),
+            "my": np.array([m.y for m in ms], dtype=np.float32),
+            "mw": np.array([m.w for m in ms], dtype=np.float32),
+            "mh": np.array([m.h for m in ms], dtype=np.float32),
+            "mref": [m.media_ref for m in ms],
+            "moff": np.array([m.offset for m in ms], dtype=np.int32),
+        })
+    return rows
 
 
 def _word_row(doc_id, page, rkind, a, b, c, t: _WordTable, idxs: List[int], **kw):
@@ -176,6 +188,9 @@ def _doc_luts(doc_id: str, cache: dict):
 def _analyze_packed_page(row, cfg: EngineConfig, mode: str, cache: dict) -> pd.DataFrame:
     """One packed page row -> structure rows (geometric analysis)."""
     doc_id, page = row["doc_id"], int(row["page"])
+    if page < 0:  # stage A quarantined the doc: pass its error on
+        return pd.DataFrame([dict(_EMPTY, doc_id=doc_id, page=page, rkind="error",
+                                  a=0, b=0, c=0, text=row["chars"][0])])
     cmp_lut, break_lut, style_xsize, style_ysize = _doc_luts(doc_id, cache)
 
     x = np.asarray(row["x"], dtype=np.float32)
@@ -311,6 +326,12 @@ def _stage_c(
 ) -> pd.DataFrame:
     """Per doc: rebuild per-page structures, run the doc-level tail."""
     doc_id = key[0]
+    errors = pdf.loc[pdf["rkind"] == "error", "text"]
+    if len(errors):
+        row = error_row(doc_id, errors.iloc[0])
+        if with_words:
+            row["words"] = []
+        return pd.DataFrame([row])
     styles = doc_styles(doc_id)
     pages_present = sorted(int(p) for p in pdf["page"].unique())
     n_pages = (pages_present[-1] + 1) if pages_present else 0

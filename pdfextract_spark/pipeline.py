@@ -1,30 +1,29 @@
-"""Production extraction pipeline: partitioning, checkpointed lineage, resume.
+"""Production extraction pipeline: partitioning, per-bucket commit, resume.
 
 Design for 10^12 documents (north rule):
 
 - **Unit of work = bucket.** `doc_bucket = pmod(xxhash64(doc_id), n_buckets)`.
-  Buckets are the checkpoint/lineage grain: each completed bucket appends one
-  manifest row (bucket, n_docs, n_spans, n_errors, wall_s, ts) and its output
-  under `spans/bucket=<b>/`. Resume anti-joins the manifest — already-done
-  buckets are never recomputed, and a mid-bucket failure re-runs only that
-  bucket (output dir is overwritten atomically per bucket).
+  Buckets are the checkpoint/lineage grain. ONE Spark write stages a
+  bucket's rows split on `kind == 'error'`; the driver renames the halves to
+  `spans/bucket=<b>/` and `quarantine/bucket=<b>/`, then commits the one-row
+  `manifest/bucket-<b>.parquet` (bucket, n_docs, n_spans, n_errors, wall_s,
+  ts) by temp file + `os.replace`. Resume skips the buckets with a readable
+  manifest file; any other bucket reruns and replaces what it left on disk.
   On a real deployment the same layout maps 1:1 onto an Iceberg table
   partitioned by `bucket(doc_id, N)` with snapshot-per-bucket commits; the
   sandbox has no Iceberg runtime, so the layout is parquet dirs + a parquet
   manifest, same semantics.
 
 - **Skew (size banding).** A ~0.1% band of ~100x documents would make one
-  Arrow batch and one task stall its whole partition. Extraction batches are
-  therefore split by size band: small docs flow in large batches; oversized
-  docs (span_count > threshold) are repartitioned round-robin so each lands
-  alone in a task. Page-level splitting of a single huge doc is legal until
-  the final doc ordering (SURVEY.md §7 known-hard #4) and is the next band if
-  single docs outgrow a task (not needed at current corpus shapes).
+  Arrow batch and one task stall its whole partition. Documents above
+  `oversize_span_threshold` spans go through the page-parallel operator
+  (operators/extract_paged.py), which fans a huge document out over
+  (doc_id, page); a per-bucket probe leaves that plan out when the band is
+  empty.
 
-- **Quarantine.** Per-doc failures inside the UDF become `kind='error'` rows
-  (TextExtractor.java:124-131 analog); they are split out of the main output
-  into `quarantine/` and counted in the manifest — a task never fails on a
-  malformed document.
+- **Quarantine.** Per-doc failures inside the UDFs become `kind='error'`
+  rows (TextExtractor.java:124-131 analog); they land in `quarantine/` and
+  are counted in the manifest — a task never fails on a malformed document.
 
 - **Metrics.** The manifest doubles as the extraction-metrics table:
   docs/sec per bucket, error rates, span counts — queryable with plain SQL.
@@ -34,16 +33,29 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from .config import CONFIG, EngineConfig
 from .operators.extract import extract_spans
+from .operators.extract_paged import extract_spans_paged
 
-MANIFEST_COLS = ["bucket", "n_docs", "n_spans", "n_errors", "wall_s", "ts"]
+MANIFEST_SCHEMA = pa.schema([
+    ("bucket", pa.int32()),
+    ("n_docs", pa.int64()),
+    ("n_spans", pa.int64()),
+    ("n_errors", pa.int64()),
+    ("wall_s", pa.float64()),
+    ("ts", pa.string()),
+])
 
 
 @dataclass
@@ -82,27 +94,6 @@ def with_bucket(documents: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def band_for_extraction(
-    documents: DataFrame, cfg: EngineConfig = CONFIG, parallelism: int = 32
-) -> DataFrame:
-    """Size-banded repartition: oversized docs one-per-task, small docs in
-    round-robin batches. Returns a union with identical schema; the extract
-    operator is band-agnostic."""
-    sized = documents.withColumn("_n_spans", F.size("spans"))
-    small = sized.filter(F.col("_n_spans") <= cfg.oversize_span_threshold)
-    big = sized.filter(F.col("_n_spans") > cfg.oversize_span_threshold)
-    # unconditional union: the old `big.limit(1).count()` existence probe
-    # launched an extra scan job per bucket whose worst case (NO oversized
-    # docs — the common case) read the whole bucket before concluding the
-    # branch was empty. An empty `big` branch through the union costs only
-    # an empty exchange whose partitions AQE coalesces away.
-    return (
-        small.repartition(parallelism * 4)
-        .unionByName(big.repartition(parallelism))
-        .drop("_n_spans")
-    )
-
-
 def write_bucketed_spans(
     spans: DataFrame, table: str, n_buckets: int = 64
 ) -> None:
@@ -124,11 +115,16 @@ def write_bucketed_spans(
 
 
 def read_manifest(spark: SparkSession, output_path: str) -> Optional[DataFrame]:
+    """The committed manifest rows; None only when `manifest/` does not
+    exist. An unreadable manifest file is skipped: its bucket is uncommitted."""
     path = os.path.join(output_path, "manifest")
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    if not os.path.isdir(path):
         return None
+    return (
+        spark.read.schema(from_arrow_schema(MANIFEST_SCHEMA))
+        .option("ignoreCorruptFiles", "true")
+        .parquet(path)
+    )
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> List[int]:
@@ -138,6 +134,17 @@ def completed_buckets(spark: SparkSession, output_path: str) -> List[int]:
     return [int(r.bucket) for r in m.select("bucket").distinct().collect()]
 
 
+def _commit_manifest(output_path: str, row: dict) -> None:
+    """Publish one bucket's manifest row atomically. The temp name starts
+    with '.' and does not end in '.parquet', so Spark and suffix-matching
+    readers skip a leftover one; the rename is the bucket's commit point."""
+    path = os.path.join(output_path, "manifest")
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, f".bucket-{row['bucket']}.tmp")
+    pq.write_table(pa.Table.from_pylist([row], schema=MANIFEST_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(path, f"bucket-{row['bucket']}.parquet"))
+
+
 def run_extraction(
     spark: SparkSession,
     documents: DataFrame,
@@ -145,7 +152,6 @@ def run_extraction(
     n_buckets: int = 16,
     cfg: EngineConfig = CONFIG,
     parallelism: int = 32,
-    page_parallel_oversize: bool = True,
     concurrency: int = 4,
 ) -> PipelineResult:
     """Checkpointed, resumable extraction of the interleaved documents table.
@@ -154,115 +160,89 @@ def run_extraction(
     buckets. Output layout:
       output_path/spans/bucket=<b>/*.parquet       extracted spans
       output_path/quarantine/bucket=<b>/*.parquet  kind='error' rows
-      output_path/manifest/*.parquet               lineage + metrics
+      output_path/manifest/bucket-<b>.parquet      lineage + metrics
 
     `concurrency` buckets are submitted at once from a driver thread pool:
     Spark's scheduler interleaves their stages, so the cluster never idles in
-    one bucket's tail while the next waits (the round-1 serial loop left
-    scheduling dead time between buckets). The per-bucket manifest commit
-    point is unchanged — a bucket is 'done' only after its files are written —
-    and the manifest append itself is serialized under a lock because
-    concurrent appends share one staging dir.
+    one bucket's tail while the next waits. Buckets share no files.
 
-    Per-bucket metrics come from ONE aggregate over the persisted spans
-    (count / error count / distinct docs) instead of three separate count
-    actions; n_docs therefore counts documents that produced output or an
-    error row (equal to the input count for any non-degenerate corpus — every
-    doc yields at least one span or a quarantine row).
-
-    page_parallel_oversize routes the oversized band through the
-    page-parallel operator (operators/extract_paged.py): a single
-    10k-page document fans out over (doc_id, page) instead of stalling
-    one task — the skew band beyond one-doc-per-task."""
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
+    Per bucket, the probe job counts the input documents, so `n_docs`
+    includes documents that yield no rows; the write's Observation gives
+    `n_spans` and `n_errors`."""
     os.makedirs(output_path, exist_ok=True)
     done = set(completed_buckets(spark, output_path))
     docs = with_bucket(documents, n_buckets)
+    staging_root = os.path.join(output_path, "_staging")
 
     buckets_skipped = [b for b in range(n_buckets) if b in done]
     todo = [b for b in range(n_buckets) if b not in done]
-    manifest_lock = threading.Lock()
 
     def process_bucket(b: int):
         t0 = time.perf_counter()
+        spark.sparkContext.setJobDescription(f"extract bucket={b}")
         bucket_docs = docs.filter(F.col("doc_bucket") == b).drop("doc_bucket")
-        if page_parallel_oversize:
-            from .operators.extract_paged import extract_spans_paged
-
-            sized = bucket_docs.withColumn("_n_spans", F.size("spans"))
-            small = sized.filter(
-                F.col("_n_spans") <= cfg.oversize_span_threshold
-            ).drop("_n_spans")
-            big = sized.filter(
-                F.col("_n_spans") > cfg.oversize_span_threshold
-            ).drop("_n_spans")
-            spans = extract_spans(small.repartition(parallelism * 4), cfg,
-                                  num_partitions=-1)
-            if big.limit(1).count():
-                spans = spans.unionByName(
-                    extract_spans_paged(big, cfg,
-                                        page_partitions=parallelism * 2,
-                                        doc_partitions=parallelism)
-                )
-        else:
-            banded = band_for_extraction(bucket_docs, cfg, parallelism)
-            spans = extract_spans(banded, cfg)
-        spans.persist()
-        try:
-            stats = spans.agg(
-                F.count(F.lit(1)).alias("n_all"),
-                F.sum(
-                    F.when(F.col("kind") == "error", 1).otherwise(0)
-                ).alias("n_err"),
-                F.countDistinct("doc_id").alias("n_docs"),
-            ).collect()[0]
-            n_spans_all = int(stats.n_all or 0)
-            n_errors = int(stats.n_err or 0)
-            n_docs = int(stats.n_docs or 0)
-
-            good = spans.filter(F.col("kind") != "error")
-            good.write.mode("overwrite").parquet(
-                os.path.join(output_path, "spans", f"bucket={b}")
+        oversized = F.size("spans") > cfg.oversize_span_threshold
+        n_docs, n_big = bucket_docs.agg(
+            F.count(F.lit(1)), F.count(F.when(oversized, 1))
+        ).first()
+        spans = extract_spans(bucket_docs.filter(~oversized), cfg,
+                              num_partitions=parallelism * 4)
+        if n_big:
+            spans = spans.unionByName(
+                extract_spans_paged(bucket_docs.filter(oversized), cfg,
+                                    page_partitions=parallelism * 2,
+                                    doc_partitions=parallelism)
             )
-            if n_errors:
-                spans.filter(F.col("kind") == "error").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(output_path, "quarantine", f"bucket={b}"))
-            wall = time.perf_counter() - t0
-            row = spark.createDataFrame(
-                [(b, n_docs, n_spans_all - n_errors, n_errors, float(round(wall, 3)),
-                  time.strftime("%Y-%m-%dT%H:%M:%S"))],
-                schema="bucket int, n_docs long, n_spans long, n_errors long, "
-                       "wall_s double, ts string",
+        # observed in the write's result stage, so a retried map stage cannot
+        # count a row twice; the coalesce writes `parallelism` files per
+        # bucket instead of one per extraction chunk
+        obs = Observation(f"bucket={b}")
+        staging = os.path.join(staging_root, f"bucket={b}")
+        (
+            spans.observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.count(F.when(F.col("kind") == "error", 1)).alias("errors"),
             )
-            # manifest append is the commit point: a bucket is 'done' only
-            # after its output files are fully written
-            with manifest_lock:
-                row.write.mode("append").parquet(
-                    os.path.join(output_path, "manifest")
-                )
-        finally:
-            spans.unpersist()
-        return b, n_docs, n_spans_all - n_errors, n_errors
+            .coalesce(parallelism)
+            .withColumn("quarantined", F.col("kind") == "error")
+            .write.mode("overwrite").partitionBy("quarantined").parquet(staging)
+        )
+        n_rows, n_errors = obs.get["rows"], obs.get["errors"]
 
-    buckets_done: List[int] = []
-    total_docs = total_spans = total_errors = 0
-    if todo:
-        with ThreadPoolExecutor(max_workers=max(1, min(concurrency, len(todo)))) as ex:
-            for b, n_docs, n_spans, n_errors in ex.map(process_bucket, todo):
-                buckets_done.append(b)
-                total_docs += n_docs
-                total_spans += n_spans
-                total_errors += n_errors
+        for flag, name in (("false", "spans"), ("true", "quarantine")):
+            src = os.path.join(staging, f"quarantined={flag}")
+            dst = os.path.join(output_path, name, f"bucket={b}")
+            shutil.rmtree(dst, ignore_errors=True)
+            if os.path.isdir(src):
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
+            elif name == "spans":
+                # partitionBy writes nothing for an empty half; keep the
+                # bucket's spans dir readable with the output schema
+                os.makedirs(dst)
+                pq.write_table(to_arrow_schema(spans.schema).empty_table(),
+                               os.path.join(dst, "part-empty.parquet"))
+
+        row = {
+            "bucket": b, "n_docs": n_docs, "n_spans": n_rows - n_errors,
+            "n_errors": n_errors, "wall_s": round(time.perf_counter() - t0, 3),
+            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
+        }
+        _commit_manifest(output_path, row)
+        return row
+
+    with ThreadPoolExecutor(max_workers=max(1, min(concurrency, len(todo)))) as ex:
+        rows = list(ex.map(process_bucket, todo))
+    # only Spark's marker files and leftovers of crashed attempts remain here
+    shutil.rmtree(staging_root, ignore_errors=True)
 
     return PipelineResult(
-        buckets_done=buckets_done,
+        buckets_done=[r["bucket"] for r in rows],
         buckets_skipped=buckets_skipped,
-        total_docs=total_docs,
-        total_spans=total_spans,
-        total_errors=total_errors,
+        total_docs=sum(r["n_docs"] for r in rows),
+        total_spans=sum(r["n_spans"] for r in rows),
+        total_errors=sum(r["n_errors"] for r in rows),
     )
 
 

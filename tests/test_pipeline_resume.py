@@ -3,8 +3,10 @@
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
+from pdfextract_spark import pipeline
 from pdfextract_spark.corpus import as_pandas
 from pdfextract_spark.pipeline import (
     completed_buckets,
@@ -47,8 +49,8 @@ def test_partial_resume(spark, docs_sdf, tmp_path):
     # fresh dir and verify completed_buckets() drives the skip logic
     r1 = run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
     assert sorted(completed_buckets(spark, out)) == [0, 1]
-    # a second run with more buckets reuses nothing (different bucketing) but
-    # never crashes on the existing manifest
+    # a second run with the same bucket count finds every bucket committed
+    # and recomputes nothing
     r2 = run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
     assert r2.buckets_done == []
 
@@ -76,3 +78,106 @@ def test_quarantine_rows_isolated(spark, tmp_path):
         q = spark.read.parquet(os.path.join(out, "quarantine"))
         assert q.count() == r.total_errors
         assert set(r.doc_id for r in q.select("doc_id").collect()) == {"broken"}
+
+
+DOCS_SCHEMA = (
+    "doc_id string, "
+    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
+def _text_spans(n):
+    return [{"kind": "text", "text": f"word{i} of a line", "media_ref": "",
+             "offset": i} for i in range(n)]
+
+
+def _assert_manifest_matches_disk(spark, out, n_docs):
+    m = json.loads(metrics_summary(spark, out))
+    assert m["docs"] == n_docs
+    assert m["spans"] == spark.read.parquet(os.path.join(out, "spans")).count()
+    q = os.path.join(out, "quarantine")
+    q_rows = spark.read.parquet(q).count() if os.path.isdir(q) else 0
+    assert m["errors"] == q_rows
+
+
+def test_oversized_doc_with_bad_span_is_quarantined(spark, tmp_path):
+    # past oversize_span_threshold, so the paged route extracts it
+    bad = _text_spans(4_100)
+    bad[17]["offset"] = None
+    docs = spark.createDataFrame(
+        [("ok", _text_spans(3)), ("big_bad", bad)], DOCS_SCHEMA
+    )
+    out = str(tmp_path / "extract_big_bad")
+    r = run_extraction(spark, docs, out, n_buckets=1, parallelism=2)
+    assert r.total_docs == 2 and r.total_errors == 1
+    q = spark.read.parquet(os.path.join(out, "quarantine")).collect()
+    assert [(row.doc_id, row.kind, row.seq) for row in q] == [("big_bad", "error", -1)]
+    assert q[0].text.startswith("TypeError")
+    m = pipeline.read_manifest(spark, out).collect()
+    assert [row.n_errors for row in m] == [1]
+
+
+def test_zero_span_doc_counts_in_n_docs(spark, tmp_path):
+    docs = spark.createDataFrame([("ok", _text_spans(3)), ("empty", [])], DOCS_SCHEMA)
+    out = str(tmp_path / "extract_empty_doc")
+    r = run_extraction(spark, docs, out, n_buckets=1, parallelism=2)
+    assert r.total_docs == 2
+    assert [row.n_docs for row in pipeline.read_manifest(spark, out).collect()] == [2]
+
+
+def test_crash_before_manifest_commit_reruns_only_that_bucket(
+    spark, docs_sdf, tmp_path, monkeypatch
+):
+    out = str(tmp_path / "extract_crash")
+    commit = pipeline._commit_manifest
+
+    def crash_on_bucket_0(output_path, row):
+        if row["bucket"] == 0:
+            raise RuntimeError("injected crash before the manifest commit")
+        commit(output_path, row)
+
+    monkeypatch.setattr(pipeline, "_commit_manifest", crash_on_bucket_0)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
+    # bucket 0's rows were renamed into place but never committed
+    assert os.listdir(os.path.join(out, "spans", "bucket=0"))
+    assert completed_buckets(spark, out) == [1]
+
+    monkeypatch.undo()
+    r = run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
+    assert r.buckets_done == [0] and r.buckets_skipped == [1]
+    _assert_manifest_matches_disk(spark, out, 40)
+
+
+def test_truncated_manifest_file_reruns_only_its_bucket(spark, docs_sdf, tmp_path):
+    out = str(tmp_path / "extract_truncated")
+    run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
+    mdir = os.path.join(out, "manifest")
+    (victim,) = [
+        os.path.join(mdir, f) for f in os.listdir(mdir)
+        if f.endswith(".parquet")
+        and pq.read_table(os.path.join(mdir, f)).column("bucket").to_pylist() == [0]
+    ]
+    with open(victim, "r+b") as fh:
+        fh.truncate(os.path.getsize(victim) // 2)
+    assert completed_buckets(spark, out) == [1]
+
+    r = run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
+    assert r.buckets_done == [0] and r.buckets_skipped == [1]
+    assert sorted(completed_buckets(spark, out)) == [0, 1]
+    _assert_manifest_matches_disk(spark, out, 40)
+
+
+def test_leftover_staging_and_temp_manifest_are_ignored(spark, docs_sdf, tmp_path):
+    out = tmp_path / "extract_leftovers"
+    stale = out / "_staging" / "bucket=0" / "quarantined=false"
+    stale.mkdir(parents=True)
+    (stale / "part-00000.parquet").write_bytes(b"not parquet")
+    (out / "manifest").mkdir()
+    (out / "manifest" / ".bucket-0.tmp").write_bytes(b"not parquet")
+
+    r = run_extraction(spark, docs_sdf, str(out), n_buckets=2, parallelism=4)
+    assert sorted(r.buckets_done) == [0, 1]
+    _assert_manifest_matches_disk(spark, str(out), 40)
+    assert not (out / "_staging").exists()
+    assert not (out / "manifest" / ".bucket-0.tmp").exists()

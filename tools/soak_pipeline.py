@@ -5,13 +5,12 @@ integrity. Prints one JSON line.
 
 Skew mode (skew_repeat > 0) is the straggler-tail experiment from the
 round-2 verdict (task #2): ~0.1% of documents are amplified to
-skew_repeat x spans (well past cfg.oversize_span_threshold), then the SAME
-staged input is extracted twice — once with the oversized band routed
-whole-doc (page_parallel_oversize=False: the monster doc serializes one
-task) and once routed through the page-parallel operator
+skew_repeat x spans (well past cfg.oversize_span_threshold), so
+run_extraction routes them through the page-parallel operator
 (operators/extract_paged.py: the doc fans out over (doc_id, page)). The
-manifest's per-bucket walls are the evidence: paged routing flattens the
-bucket-wall tail (max/median) while keeping manifest == disk exact.
+manifest's per-bucket walls report the bucket-wall tail (max/median), and
+manifest == disk is checked. The whole-doc comparison for the oversized
+band is perfbench's `whole.band_s`.
 
 Usage: python tools/soak_pipeline.py [sf_dir] [repl] [n_buckets] [skew_repeat]
 """
@@ -51,16 +50,15 @@ def _bucket_wall_stats(spark, out: str) -> dict:
     }
 
 
-def _run_variant(spark, staged, n_buckets: int, cpus: int, paged: bool) -> dict:
+def _run(spark, staged, n_buckets: int, cpus: int) -> dict:
     from pdfextract_spark.pipeline import metrics_summary, run_extraction
 
-    out = tempfile.mkdtemp(prefix=f"soak_{'paged' if paged else 'whole'}_")
+    out = tempfile.mkdtemp(prefix="soak_out_")
     try:
         t0 = time.perf_counter()
         res = run_extraction(
             spark, staged, out, n_buckets=n_buckets, parallelism=cpus,
             concurrency=int(os.environ.get("SOAK_CONCURRENCY", "4")),
-            page_parallel_oversize=paged,
         )
         wall = time.perf_counter() - t0
         manifest = json.loads(metrics_summary(spark, out))
@@ -152,17 +150,9 @@ def main(sf_dir: str, repl: int, n_buckets: int, skew_repeat: int = 0) -> None:
         "staging_write_s": round(stage_s, 1),
     }
     try:
-        if skew_repeat > 0:
-            result["whole_doc_band"] = _run_variant(
-                spark, staged, n_buckets, cpus, paged=False
-            )
-            result["paged_band"] = _run_variant(
-                spark, staged, n_buckets, cpus, paged=True
-            )
-        else:
-            v = _run_variant(spark, staged, n_buckets, cpus, paged=True)
-            v["docs_per_sec"] = round(n_docs / v["wall_s"], 1)
-            result.update(v)
+        v = _run(spark, staged, n_buckets, cpus)
+        v["docs_per_sec"] = round(n_docs / v["wall_s"], 1)
+        result.update(v)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     print(json.dumps(result))
