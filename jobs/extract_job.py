@@ -10,7 +10,9 @@
         [--n-buckets 256] [--parallelism 512]
 
 Resumable: rerunning after a failure completes only the missing buckets
-(pipeline.run_extraction's manifest anti-join). On a real cluster the input
+(pipeline.run_extraction's manifest anti-join). --output may be any path
+Hadoop resolves (hdfs://, s3a://, file:// or local): the per-bucket commit
+goes through that path's FileSystem. On a real cluster the input
 is the Iceberg documents table and the output is an Iceberg table partitioned
 by bucket(doc_id, N); this sandbox uses parquet with the same layout."""
 

@@ -1,79 +1,18 @@
-"""Engine constants.
+"""Engine configuration: the synthetic-layout parameters and the Spark
+routing threshold.
 
-Centralizes every threshold the reference hard-codes (semantics documented in
-SURVEY.md §2/§4; reference values at /root/reference/model/.../Constants.java:28-80
-and the call sites cited per constant). Values are plain Python floats/ints;
-geometry math elsewhere is float32 to match the reference's numerics.
+The reference's analysis thresholds are module constants beside the oracle
+code that applies them (oracle/*.py); SURVEY.md §2/§4 documents their
+semantics and reference sources.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
 class EngineConfig:
-    # ---- word segmentation (W1-W3; WordSegmentatorImpl.java) ----
-    # denominator of the word-boundary limit 0.8*fontSize/FONT_DENOM
-    # (WordSegmentatorImpl.java:42,193) and the charspacing floor
-    font_denom: float = 5.0
-    word_boundary_factor: float = 0.8
-    # use existing space chars for word splits when present (Constants.java:38)
-    use_existing_whitespace: bool = True
-    # fallback font size when a style reports 0 (WordSegmentatorImpl.java:149-153)
-    fallback_font_size: float = 10.0
-
-    # ---- style comparison (W4; StyleComparator.java) ----
-    subtle_size_difference: int = 1
-    big_text_y_size: float = 13.0
-
-    # ---- line segmentation (B3; LineSegmentator.java:40-41) ----
-    line_coverage_limit: int = 1          # boundary where coverage <= LIMIT
-    line_boundary_lookahead: int = 2
-    tiny_line_height_frac: float = 0.7    # combineLines: <=0.7 height merged up
-    tiny_line_max_gap: float = 2.0
-
-    # ---- paragraph segmentation (B5; ParagraphSegmentator.java) ----
-    split_paragraphs_by_styles: bool = True     # Constants.java:39
-    para_same_style_gap_factor: float = 1.5
-    para_subtle_gap_factor: float = 1.1
-
-    # ---- region stats (P10; PhysicalPageRegion.java) ----
-    min_column_spacing_factor: float = 0.8      # 0.8 * avg font x-size (:208-210)
-    min_row_spacing_factor: float = 1.1         # 1.1 * modal vertical gap (:212-219)
-
-    # ---- whitespace cover / column detection (P3/P4; Constants.java:66-80) ----
-    whitespace_fuzziness: float = 0.2
-    whitespace_obstacle_overlap: float = 1.5
-    whitespace_max_queue_size: int = 100_000
-    whitespace_number_wanted: int = 50
-    columns_min_column_width: float = 2.0
-    columns_enable_column_detection: bool = True
-    column_min_aspect: float = 1.5              # ColumnFinder candidate h/w > 1.5
-    column_candidate_score: int = 500
-    column_boundary_score: int = 1000
-    column_min_height_frac: float = 0.15        # >=15% of region height
-    column_margin_frac: float = 0.05            # not in outer 5% margins
-    column_combine_distance: float = 50.0       # boundaries <50pt apart combined
-
-    # ---- page splits (P7/P8) ----
-    top_split_frac: float = 0.4                 # scan top 40% of page
-    top_split_min_distance: float = 10.0
-    band_split_min_distance: float = 20.0
-    separator_min_width_frac: float = 0.6       # >=60% region width
-
-    # ---- graphics (S14/P2; DrawingSurfaceImpl / GraphicSegmentatorImpl) ----
-    graphic_combine_distance: float = 5.0
-    graphic_container_min_texts: int = 5
-
-    # ---- logical ops (L1-L6) ----
-    page_number_bottom_frac: float = 0.15       # RemovePageNumbers.java:63-76
-    page_number_min_page_frac: float = 0.5      # found on >= half the pages (:89-95)
-    heading_levels: int = 3                     # RecognizeDivs: DIV1-3
-
-    # ---- scan filters (S6/S8) ----
-    bad_font_control_ratio: float = 0.10        # fonts >10% ISO-control dropped
-
     # ---- synthetic layout (S4-analog tokenizer; ours, deterministic) ----
     page_height: float = 800.0
     page_width: float = 600.0

@@ -7,7 +7,9 @@ Design for 10^12 documents (north rule):
   bucket's rows split on `kind == 'error'`; the driver renames the halves to
   `spans/bucket=<b>/` and `quarantine/bucket=<b>/`, then commits the one-row
   `manifest/bucket-<b>.parquet` (bucket, n_docs, n_spans, n_errors, wall_s,
-  ts) by temp file + `os.replace`. Resume skips the buckets with a readable
+  ts) by temp file + rename. Every file-system step goes through the
+  Hadoop FileSystem of the output path, so hdfs:// and s3a:// outputs
+  commit where Spark writes. Resume skips the buckets with a readable
   manifest file; any other bucket reruns and replaces what it left on disk.
   On a real deployment the same layout maps 1:1 onto an Iceberg table
   partitioned by `bucket(doc_id, N)` with snapshot-per-bucket commits; the
@@ -32,8 +34,6 @@ Design for 10^12 documents (north rule):
 from __future__ import annotations
 
 import json
-import os
-import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -114,11 +114,45 @@ def write_bucketed_spans(
     )
 
 
+class _OutputFS:
+    """The Hadoop FileSystem that `output_path` resolves to, so the driver's
+    existence checks, deletes, renames and manifest writes land where Spark's
+    writes do (hdfs://, s3a://, file:// or a bare local path)."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(root).getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def exists(self, path: str) -> bool:
+        return self._fs.exists(self._path(path))
+
+    def delete(self, path: str) -> None:
+        self._fs.delete(self._path(path), True)
+
+    def rename(self, src: str, dst: str) -> None:
+        """Move `src` to `dst`, replacing whatever is at `dst`. HDFS's rename
+        does not overwrite, so `dst` is deleted first: a crash in between
+        leaves `dst` absent, never half-written."""
+        self.delete(dst)
+        self._fs.mkdirs(self._path(dst).getParent())
+        if not self._fs.rename(self._path(src), self._path(dst)):
+            raise IOError(f"rename {src} -> {dst} failed")
+
+    def write_parquet(self, path: str, table: pa.Table) -> None:
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink)
+        stream = self._fs.create(self._path(path), True)
+        try:
+            stream.write(bytearray(sink.getvalue().to_pybytes()))
+        finally:
+            stream.close()
+
+
 def read_manifest(spark: SparkSession, output_path: str) -> Optional[DataFrame]:
     """The committed manifest rows; None only when `manifest/` does not
     exist. An unreadable manifest file is skipped: its bucket is uncommitted."""
-    path = os.path.join(output_path, "manifest")
-    if not os.path.isdir(path):
+    path = f"{output_path}/manifest"
+    if not _OutputFS(spark, output_path).exists(path):
         return None
     return (
         spark.read.schema(from_arrow_schema(MANIFEST_SCHEMA))
@@ -134,15 +168,13 @@ def completed_buckets(spark: SparkSession, output_path: str) -> List[int]:
     return [int(r.bucket) for r in m.select("bucket").distinct().collect()]
 
 
-def _commit_manifest(output_path: str, row: dict) -> None:
-    """Publish one bucket's manifest row atomically. The temp name starts
-    with '.' and does not end in '.parquet', so Spark and suffix-matching
-    readers skip a leftover one; the rename is the bucket's commit point."""
-    path = os.path.join(output_path, "manifest")
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, f".bucket-{row['bucket']}.tmp")
-    pq.write_table(pa.Table.from_pylist([row], schema=MANIFEST_SCHEMA), tmp)
-    os.replace(tmp, os.path.join(path, f"bucket-{row['bucket']}.parquet"))
+def _commit_manifest(fs: _OutputFS, output_path: str, row: dict) -> None:
+    """Publish one bucket's manifest row. The temp name starts with '.' and
+    does not end in '.parquet', so Spark and suffix-matching readers skip a
+    leftover one; the rename is the bucket's commit point."""
+    tmp = f"{output_path}/manifest/.bucket-{row['bucket']}.tmp"
+    fs.write_parquet(tmp, pa.Table.from_pylist([row], schema=MANIFEST_SCHEMA))
+    fs.rename(tmp, f"{output_path}/manifest/bucket-{row['bucket']}.parquet")
 
 
 def run_extraction(
@@ -169,10 +201,10 @@ def run_extraction(
     Per bucket, the probe job counts the input documents, so `n_docs`
     includes documents that yield no rows; the write's Observation gives
     `n_spans` and `n_errors`."""
-    os.makedirs(output_path, exist_ok=True)
+    fs = _OutputFS(spark, output_path)
     done = set(completed_buckets(spark, output_path))
     docs = with_bucket(documents, n_buckets)
-    staging_root = os.path.join(output_path, "_staging")
+    staging_root = f"{output_path}/_staging"
 
     buckets_skipped = [b for b in range(n_buckets) if b in done]
     todo = [b for b in range(n_buckets) if b not in done]
@@ -186,7 +218,7 @@ def run_extraction(
             F.count(F.lit(1)), F.count(F.when(oversized, 1))
         ).first()
         spans = extract_spans(bucket_docs.filter(~oversized), cfg,
-                              num_partitions=parallelism * 4)
+                              num_partitions=parallelism)
         if n_big:
             spans = spans.unionByName(
                 extract_spans_paged(bucket_docs.filter(oversized), cfg,
@@ -194,48 +226,47 @@ def run_extraction(
                                     doc_partitions=parallelism)
             )
         # observed in the write's result stage, so a retried map stage cannot
-        # count a row twice; the coalesce writes `parallelism` files per
-        # bucket instead of one per extraction chunk
+        # count a row twice. The write runs inside the extraction tasks
+        # (`parallelism` for the small band, page_partitions for the paged
+        # band's stage C) and leaves one file per task and half.
         obs = Observation(f"bucket={b}")
-        staging = os.path.join(staging_root, f"bucket={b}")
+        staging = f"{staging_root}/bucket={b}"
         (
             spans.observe(
                 obs,
                 F.count(F.lit(1)).alias("rows"),
                 F.count(F.when(F.col("kind") == "error", 1)).alias("errors"),
             )
-            .coalesce(parallelism)
             .withColumn("quarantined", F.col("kind") == "error")
             .write.mode("overwrite").partitionBy("quarantined").parquet(staging)
         )
         n_rows, n_errors = obs.get["rows"], obs.get["errors"]
 
         for flag, name in (("false", "spans"), ("true", "quarantine")):
-            src = os.path.join(staging, f"quarantined={flag}")
-            dst = os.path.join(output_path, name, f"bucket={b}")
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
-            elif name == "spans":
+            src = f"{staging}/quarantined={flag}"
+            dst = f"{output_path}/{name}/bucket={b}"
+            if fs.exists(src):
+                fs.rename(src, dst)
+                continue
+            fs.delete(dst)
+            if name == "spans":
                 # partitionBy writes nothing for an empty half; keep the
                 # bucket's spans dir readable with the output schema
-                os.makedirs(dst)
-                pq.write_table(to_arrow_schema(spans.schema).empty_table(),
-                               os.path.join(dst, "part-empty.parquet"))
+                fs.write_parquet(f"{dst}/part-empty.parquet",
+                                 to_arrow_schema(spans.schema).empty_table())
 
         row = {
             "bucket": b, "n_docs": n_docs, "n_spans": n_rows - n_errors,
             "n_errors": n_errors, "wall_s": round(time.perf_counter() - t0, 3),
             "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         }
-        _commit_manifest(output_path, row)
+        _commit_manifest(fs, output_path, row)
         return row
 
     with ThreadPoolExecutor(max_workers=max(1, min(concurrency, len(todo)))) as ex:
         rows = list(ex.map(process_bucket, todo))
     # only Spark's marker files and leftovers of crashed attempts remain here
-    shutil.rmtree(staging_root, ignore_errors=True)
+    fs.delete(staging_root)
 
     return PipelineResult(
         buckets_done=[r["bucket"] for r in rows],

@@ -131,10 +131,10 @@ def test_crash_before_manifest_commit_reruns_only_that_bucket(
     out = str(tmp_path / "extract_crash")
     commit = pipeline._commit_manifest
 
-    def crash_on_bucket_0(output_path, row):
+    def crash_on_bucket_0(fs, output_path, row):
         if row["bucket"] == 0:
             raise RuntimeError("injected crash before the manifest commit")
-        commit(output_path, row)
+        commit(fs, output_path, row)
 
     monkeypatch.setattr(pipeline, "_commit_manifest", crash_on_bucket_0)
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -181,3 +181,20 @@ def test_leftover_staging_and_temp_manifest_are_ignored(spark, docs_sdf, tmp_pat
     _assert_manifest_matches_disk(spark, str(out), 40)
     assert not (out / "_staging").exists()
     assert not (out / "manifest" / ".bucket-0.tmp").exists()
+
+
+def test_uri_output_path_commits_through_its_file_system(spark, docs_sdf, tmp_path):
+    # a scheme-qualified path must resolve through Hadoop, never as a
+    # relative local directory named "file:"
+    local = tmp_path / "extract_uri"
+    out = local.as_uri()
+    r1 = run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
+    assert sorted(r1.buckets_done) == [0, 1] and r1.total_docs == 40
+    assert sorted(f for f in os.listdir(local / "manifest")
+                  if not f.startswith(".")) == ["bucket-0.parquet", "bucket-1.parquet"]
+    assert sorted(os.listdir(local / "spans")) == ["bucket=0", "bucket=1"]
+    assert not (local / "_staging").exists()
+    _assert_manifest_matches_disk(spark, str(local), 40)
+
+    r2 = run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
+    assert r2.buckets_done == [] and sorted(r2.buckets_skipped) == [0, 1]
