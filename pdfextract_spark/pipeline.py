@@ -220,10 +220,12 @@ def run_extraction(
         spans = extract_spans(bucket_docs.filter(~oversized), cfg,
                               num_partitions=parallelism)
         if n_big:
+            # no more stage-A tasks than oversized docs: an empty Python
+            # task still pays the worker's per-task setup
             spans = spans.unionByName(
                 extract_spans_paged(bucket_docs.filter(oversized), cfg,
                                     page_partitions=parallelism * 2,
-                                    doc_partitions=parallelism)
+                                    doc_partitions=min(parallelism, n_big))
             )
         # observed in the write's result stage, so a retried map stage cannot
         # count a row twice. The write runs inside the extraction tasks
