@@ -2,10 +2,24 @@
 
 Computes exactly what ``oracle.document.extract_document`` computes — bit-exact
 float32 — but on columnar numpy arrays: no Rect/Glyph object graphs, no
-per-glyph method dispatch. Sequential folds the reference semantics genuinely
-require (W1 line grouping, W3 word assembly, B5 paragraph fold) remain lean
-scalar loops over arrays; everything batchable (pairwise distances, y-histogram,
-slab scans, style comparison) is numpy elementwise work.
+per-glyph method dispatch. The cost that is left is per-call interpreter work,
+so the kernels work on a whole page at a time wherever the result stays exact:
+
+- W1 line grouping: the horizontal test compares a glyph with the previous
+  one only, so it is one array pass; the baseline / maxY / style state of
+  the current line is a scalar walk (comparisons on exact Python copies).
+- W2/W3 words: one distance pass over the page's consecutive glyphs, one
+  segmented boundary cut, word groups from one boundary mask. A line where
+  the pairwise bbox-union fold does not provably degenerate to those
+  glyph-to-glyph distances (blank or zero-size glyphs, y/h varying, x going
+  back, a union that does not reproduce endX) takes the exact scalar fold.
+- B3 line combining and the B5 paragraph fold stay scalar: each decision
+  depends on the one before. A line's bbox fold and dominating style are
+  pure functions of the word table and the index order, so they are
+  memoized on the table: B3, B5, the region fold, the paragraph sort and
+  the logical tail each ask for them, and each is computed once.
+- Everything else batchable (y-histogram, slab scans, style comparison, the
+  page split) is numpy elementwise work.
 
 Float32 parity notes (tests assert equality vs the oracle on every corpus):
 - np.float32 scalar/elementwise arithmetic == the oracle's f32(a op b)
@@ -21,7 +35,7 @@ paragraphs,logical}.py and SURVEY.md §2 (file:line cites into /root/reference).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
@@ -31,6 +45,7 @@ from ..layout import CharTable, MediaBox, layout_document
 from ..oracle.document import OutSpan
 from ..oracle.lines import find_line_boundaries
 from ..oracle.regions import (
+    MEDIA_CONTAINER,
     MEDIA_HSEP,
     analyze_page_regions,
     categorize_media_combined,
@@ -41,11 +56,13 @@ from ..oracle.style import (
     BIG_DIFFERENCE,
     FORMULA,
     SAME_STYLE,
+    SAME_STYLE_AND_BIG_TEXT,
     SPLIT,
+    SUBTLE_DIFFERENCE,
     Style,
     style_compare,
 )
-from ..oracle.words import FONT_DENOM, estimate_boundary_cut
+from ..oracle.words import FONT_DENOM, JUMP_FRAC, SINGLE_FRAC
 
 # sentinel style index for FORMULA-dominated lines (LineNode.findDominating
 # Style override); never a valid index into the per-doc style dim
@@ -90,8 +107,23 @@ class _Glyphs:
         return len(self.text)
 
 
+def _page_slices(page: np.ndarray) -> Dict[int, np.ndarray]:
+    """Each page's char indices, in table order. ONE stable argsort groups
+    the chars by page (a boolean mask per page would be O(pages x chars):
+    ~10 s for a 1k-page document)."""
+    order = np.argsort(page, kind="stable")
+    sorted_pages = page[order]
+    page_vals = np.unique(sorted_pages)
+    starts = np.searchsorted(sorted_pages, page_vals, side="left")
+    ends = np.searchsorted(sorted_pages, page_vals, side="right")
+    return {int(p): order[s:e] for p, s, e in zip(page_vals, starts, ends)}
+
+
 def _page_glyphs(table: CharTable, mask: np.ndarray) -> _Glyphs:
-    idx = np.nonzero(mask)[0]
+    return _glyphs_at(table, np.nonzero(mask)[0])
+
+
+def _glyphs_at(table: CharTable, idx: np.ndarray) -> _Glyphs:
     x = table.x[idx]
     y = table.y[idx]
     w = table.w[idx]
@@ -101,7 +133,7 @@ def _page_glyphs(table: CharTable, mask: np.ndarray) -> _Glyphs:
         ex=x + w, ey=y + h,
         baseline=table.baseline[idx],
         style=table.style_idx[idx],
-        text=[table.char[i] for i in idx],
+        text=[table.char[i] for i in idx.tolist()],
         origin=table.offset[idx].astype(np.int64),
     )
 
@@ -145,16 +177,13 @@ def _dist_scalar(ax, ay, aw, ah, bx, by, bw, bh) -> np.float32:
     return np.float32(math.sqrt(float(d)))
 
 
-def _consecutive_distances(g: _Glyphs, idx: List[int]) -> np.ndarray:
-    """Vectorized rect distance between consecutive line glyphs (W2 input)."""
-    if len(idx) <= 1:
-        return np.empty(0, dtype=np.float32)
-    ii = np.asarray(idx, dtype=np.int64)
-    a, b = ii[:-1], ii[1:]
-    ax, ay, aw, ah = g.x[a], g.y[a], g.w[a], g.h[a]
-    aex, aey = g.ex[a], g.ey[a]
-    bx, by = g.x[b], g.y[b]
-    bex, bey = g.ex[b], g.ey[b]
+def _pair_distances(x, y, w, h, ex, ey) -> np.ndarray:
+    """Vectorized rect distance between every pair of consecutive glyphs
+    (W2 input; the pairs that straddle two lines are masked by the caller)."""
+    ax, ay, aw, ah = x[:-1], y[:-1], w[:-1], h[:-1]
+    aex, aey = ex[:-1], ey[:-1]
+    bx, by = x[1:], y[1:]
+    bex, bey = ex[1:], ey[1:]
     inter = (
         ~((aw <= _F0) | (ah <= _F0))
         & ~(bex < ax) & ~(bx > aex) & ~(by > aey) & (bey > ay)
@@ -165,6 +194,55 @@ def _consecutive_distances(g: _Glyphs, idx: List[int]) -> np.ndarray:
     out = np.sqrt(d, dtype=np.float32)
     out[inter] = _F0
     return out
+
+
+# ------------------------------------------------------------------ word table
+
+@dataclass
+class _WordTable:
+    x: np.ndarray
+    y: np.ndarray
+    w: np.ndarray
+    h: np.ndarray
+    ex: np.ndarray
+    ey: np.ndarray
+    style: np.ndarray     # int32
+    text: List[str]
+    tlen: np.ndarray      # int64 len(text)
+    origin: np.ndarray    # int64
+    # _line_pos / _dominating_style results keyed by the index tuple: the
+    # folds are pure functions of the (immutable) table and the index order,
+    # and the same final line is asked for by B3, B5, the region fold, the
+    # paragraph sort and the logical tail
+    pos_memo: Dict[tuple, tuple] = field(default_factory=dict, repr=False)
+    style_memo: Dict[tuple, int] = field(default_factory=dict, repr=False)
+
+    def __len__(self) -> int:
+        return len(self.text)
+
+
+def _word_table(x, y, w, h, style, text: List[str], origin) -> _WordTable:
+    x = np.asarray(x, dtype=np.float32)
+    y = np.asarray(y, dtype=np.float32)
+    w = np.asarray(w, dtype=np.float32)
+    h = np.asarray(h, dtype=np.float32)
+    return _WordTable(
+        x=x, y=y, w=w, h=h, ex=x + w, ey=y + h,
+        style=np.asarray(style, dtype=np.int32),
+        text=text,
+        tlen=np.fromiter(map(len, text), dtype=np.int64, count=len(text)),
+        origin=np.asarray(origin, dtype=np.int64),
+    )
+
+
+def _take_words(t: _WordTable, keep: np.ndarray) -> _WordTable:
+    idx = np.nonzero(keep)[0]
+    return _WordTable(
+        x=t.x[idx], y=t.y[idx], w=t.w[idx], h=t.h[idx],
+        ex=t.ex[idx], ey=t.ey[idx], style=t.style[idx],
+        text=[t.text[i] for i in idx.tolist()],
+        tlen=t.tlen[idx], origin=t.origin[idx],
+    )
 
 
 # ------------------------------------------------------------ W1-W3 words
@@ -185,281 +263,240 @@ def _approximate_char_spacing(distances: np.ndarray) -> np.float32:
     return np.float32(total / np.float32(counted))
 
 
-@dataclass
-class _Word:
-    x: np.float32
-    y: np.float32
-    w: np.float32
-    h: np.float32
-    text: str
-    style: int
-    baseline: np.float32
-    origin: int
+def _line_starts(x, w, ex, ey, baseline, style, break_lut) -> List[int]:
+    """W1 on baseline-sorted glyphs: the index where each line starts.
+
+    The horizontal test only compares a glyph with the one before it, so it
+    is computed for all glyphs at once; the running baseline / maxY / style
+    state stays a scalar walk, on exact Python copies of the float32 values
+    (it only compares them)."""
+    prev_ex = np.empty_like(ex)
+    prev_ex[0] = ex[0]
+    prev_ex[1:] = ex[:-1]
+    # not is_within_variance(max_x, gx, gw), max_x being the previous endX
+    far = ~((prev_ex == x) | (((prev_ex - w) <= x) & ((prev_ex + w) >= x)))
+    b = baseline.tolist()
+    exl = ex.tolist()
+    eyl = ey.tolist()
+    st = style.tolist()
+    blut = break_lut.tolist()
+    farl = far.tolist()
+    starts = [0]
+    line_base = b[0]
+    max_y = float(_F32_TINY)
+    cur_style = st[0]
+    for j in range(len(b)):
+        gb = b[j]
+        if (line_base != gb and gb > max_y) or farl[j] or blut[st[j]][cur_style]:
+            if j:
+                starts.append(j)
+            line_base = gb
+            max_y = eyl[j]
+            cur_style = st[j]
+        if exl[j] > max_y:
+            max_y = exl[j]  # reference quirk: maxY tracks endX
+    return starts
 
 
-def _make_words_fast(
-    g: _Glyphs, idx: List[int], texts: List[str], contains_spaces: bool,
-    dists: Optional[np.ndarray], char_spacing: np.float32, limit: np.float32,
-    x: np.ndarray, y: np.ndarray, w: np.ndarray, h: np.ndarray, ex: np.ndarray,
-) -> Optional[List[_Word]]:
-    """Vectorized W3 (two-pass). Returns None when the float32 union
-    identities don't hold for the tentative grouping — caller must run the
-    exact pairwise fold then.
-
-    Preconditions checked here: constant y/h, monotone x/ex, positive w/h.
-    Then: tentative word groups from glyph-to-glyph distances (== the fold's
-    union-to-next distances IF f32(x_s + f32(ex_j - x_s)) == ex_j for every
-    glyph j in the group starting at s); validate exactly that, per glyph,
-    against its tentative group start. When it holds the fold provably
-    produces w = f32(ex_e - x_s) (multi-glyph) and the same boundaries.
-    """
-    n = len(idx)
-    if not ((y == y[0]).all() and (h == h[0]).all()):
-        return None
-    if (np.diff(x) < 0).any() or (np.diff(ex) < 0).any():
-        return None
-    y0 = y[0]
-    h0 = h[0]
-    ey0 = np.float32(y0 + h0)
-    # y-axis union fixpoint: h after first combine is f32(ey - y); it must
-    # stay there (and equal h0, so single- and multi-glyph words agree)
-    if np.float32(ey0 - y0) != h0:
-        return None
-
-    if contains_spaces:
-        is_space = np.array([t.strip() == "" for t in texts], dtype=bool)
-        boundary_after = is_space[1:] | is_space[:-1]
-    else:
-        is_space = np.zeros(n, dtype=bool)
-        boundary_after = (dists - char_spacing) > limit
-
-    starts_new = np.empty(n, dtype=bool)
-    starts_new[0] = True
-    starts_new[1:] = boundary_after
-    group_starts = np.nonzero(starts_new)[0]
-    gid = np.cumsum(starts_new) - 1
-
-    # per-glyph x identity vs own group start
-    x1g = x[group_starts][gid]
-    if not (x1g + (ex - x1g) == ex).all():
-        return None
-
-    ii = np.asarray(idx, dtype=np.int64)
-    styles = g.style[ii].tolist()
-    baselines = list(g.baseline[ii])
-    origins = g.origin[ii].tolist()
-
-    group_ends = np.append(group_starts[1:], n) - 1
-    words: List[_Word] = []
-    for gi in range(len(group_starts)):
-        s = int(group_starts[gi])
-        if is_space[s]:
-            continue
-        e = int(group_ends[gi])
-        if e == s:
-            ww_ = w[s]
-        else:
-            ww_ = np.float32(ex[e] - x[s])
-        words.append(
-            _Word(
-                x[s], y0, ww_, h0,
-                "".join(texts[s : e + 1]) if e != s else texts[s],
-                styles[s], baselines[s], origins[s],
-            )
-        )
-    return words
+def _boundary_cuts(d: np.ndarray, pline: np.ndarray, n_lines: int,
+                   font_size: np.ndarray) -> np.ndarray:
+    """oracle words.estimate_boundary_cut for every line of a page at once.
+    d: the in-line pair distances, pline: each one's line (nondecreasing)."""
+    cut = np.full(n_lines, np.inf, dtype=np.float32)
+    if d.size == 0:
+        return cut
+    s = d[np.lexsort((d, pline))]
+    first = np.ones(s.size, dtype=bool)
+    first[1:] = pline[1:] != pline[:-1]
+    seg = np.nonzero(first)[0]
+    single_cut = SINGLE_FRAC * font_size[pline[seg]]
+    cut[pline[seg]] = np.where(s[seg] > single_cut, single_cut, np.float32(np.inf))
+    jump = np.nonzero(
+        ~first[1:] & ((s[1:] - s[:-1]) > (JUMP_FRAC * font_size)[pline[:-1]])
+    )[0]
+    if jump.size:
+        jl = pline[jump]
+        k = jump[np.concatenate(([True], jl[1:] != jl[:-1]))]
+        cut[pline[k]] = (s[k] + s[k + 1]) / _F2
+    return cut
 
 
-def _make_words_in_line(
-    g: _Glyphs, idx: List[int], mode: str, style_xsize: np.ndarray
-) -> List[_Word]:
-    texts = [g.text[i] for i in idx]
-    contains_spaces = any(tx == " " for tx in texts)
-
-    xs = int(style_xsize[g.style[idx[0]]])
-    font_size = F32(10.0) if xs == 0 else F32(float(xs))
-    limit = _F08 * font_size / FONT_DENOM
-
-    ii = np.asarray(idx, dtype=np.int64)
-    ax = g.x[ii]
-    ay = g.y[ii]
-    aw = g.w[ii]
-    ah = g.h[ii]
-    aex = g.ex[ii]
-
-    char_spacing = _F0
-    dists = None
-    if not contains_spaces:
-        dists = _consecutive_distances(g, idx)
-        if mode == "legacy":
-            char_spacing = _approximate_char_spacing(dists)
-        else:
-            cut = estimate_boundary_cut(dists, font_size)
-            char_spacing = np.float32(cut - limit)
-
-    # vectorized fast path when the pairwise-union fold provably degenerates
-    any_blank = any(tx.strip() == "" and tx != " " for tx in texts)
-    if not any_blank and (aw > _F0).all() and (ah > _F0).all():
-        fast = _make_words_fast(
-            g, idx, texts, contains_spaces, dists, char_spacing, limit,
-            ax, ay, aw, ah, aex,
-        )
-        if fast is not None:
-            return fast
-
-    # bulk-extract line columns as lists of np.float32 scalars (float32
-    # arithmetic preserved; list indexing beats per-access array indexing)
-    lx = list(ax)
-    ly = list(ay)
-    lw = list(aw)
-    lh = list(ah)
-    lex = list(aex)
-    ley = list(g.ey[ii])
-    lst = g.style[ii].tolist()
-    lbase = list(g.baseline[ii])
-    lorig = g.origin[ii].tolist()
-
-    words: List[_Word] = []
-    n = len(idx)
+def _fold_line_words(
+    x, y, w, h, ex, ey, texts, style, origin, s: int, e: int,
+    contains_spaces: bool, char_spacing: np.float32, limit: np.float32,
+) -> list:
+    """Exact W3 pairwise fold over glyphs s..e-1 (oracle
+    words.create_words_in_line): the word's union bbox grows glyph by glyph,
+    and the boundary distance is measured from the union. Returns
+    (x, y, w, h, text, style, origin) per word."""
+    # list copies of np.float32 scalars: float32 arithmetic preserved, and
+    # list indexing beats per-access array indexing
+    lx = list(x[s:e])
+    ly = list(y[s:e])
+    lw = list(w[s:e])
+    lh = list(h[s:e])
+    lex = list(ex[s:e])
+    ley = list(ey[s:e])
+    tx = texts[s:e]
+    words: list = []
+    n = e - s
     k = 0
-    cur: Optional[_Word] = None
+    cur = None
     while k < n or cur is not None:
         if cur is None:
-            cur = _Word(
-                lx[k], ly[k], lw[k], lh[k],
-                texts[k], lst[k], lbase[k], lorig[k],
-            )
+            cur = [lx[k], ly[k], lw[k], lh[k], tx[k], int(style[s + k]), int(origin[s + k])]
             k += 1
-        if cur.text.strip() == "":
+        if cur[4].strip() == "":
             cur = None
             continue
         if k >= n:
-            words.append(cur)
-            cur = None
+            words.append(tuple(cur))
             break
         if contains_spaces:
-            boundary = texts[k].strip() == ""
+            boundary = tx[k].strip() == ""
         else:
-            d = _dist_scalar(
-                cur.x, cur.y, cur.w, cur.h, lx[k], ly[k], lw[k], lh[k]
-            )
+            d = _dist_scalar(cur[0], cur[1], cur[2], cur[3], lx[k], ly[k], lw[k], lh[k])
             boundary = bool((d - char_spacing) > limit)
         if boundary:
-            words.append(cur)
+            words.append(tuple(cur))
             cur = None
         else:
-            # combine: text concat + pairwise bbox-union fold (keeps style,
-            # baseline, origin of the first glyph)
-            aex = cur.x + cur.w
-            aey = cur.y + cur.h
-            bex = lex[k]
-            bey = ley[k]
-            bx = lx[k]
-            by = ly[k]
-            x1 = cur.x if cur.x <= bx else bx
-            y1 = cur.y if cur.y <= by else by
+            # combine: text concat + pairwise bbox-union fold (keeps style
+            # and origin of the first glyph)
+            cx, cy = cur[0], cur[1]
+            aex = cx + cur[2]
+            aey = cy + cur[3]
+            bx, by, bex, bey = lx[k], ly[k], lex[k], ley[k]
+            x1 = cx if cx <= bx else bx
+            y1 = cy if cy <= by else by
             x2 = aex if aex >= bex else bex
             y2 = aey if aey >= bey else bey
-            cur = _Word(
-                x1, y1, x2 - x1, y2 - y1,
-                cur.text + texts[k], cur.style, cur.baseline, cur.origin,
-            )
+            cur[0:5] = [x1, y1, x2 - x1, y2 - y1, cur[4] + tx[k]]
             k += 1
     return words
 
 
 def _segment_words_page(
     g: _Glyphs, break_lut: np.ndarray, style_xsize: np.ndarray, mode: str
-) -> List[_Word]:
-    """W1 line grouping + W3 per line (oracle words.segment_words)."""
+) -> _WordTable:
+    """W1 line grouping + W2/W3 per line (oracle words.segment_words).
+
+    W2 and W3 run once per page: one distance pass over consecutive glyphs,
+    a segmented boundary cut, and word groups from the boundary mask. That
+    shortcut is exact only where the pairwise bbox-union fold degenerates
+    to glyph-to-glyph distances, so it is checked per line (no blank
+    non-space glyph, positive w/h, constant y/h, monotone x/endX, and
+    f32(x_s + f32(ex_j - x_s)) == ex_j for every glyph j of a word starting
+    at s; then the fold provably gives w = f32(ex_e - x_s) and the same
+    boundaries). A line that fails falls back to the exact fold."""
     m = len(g)
     if m == 0:
-        return []
+        return _word_table([], [], [], [], [], [], [])
     order = np.argsort(g.baseline, kind="stable")
-    oidx = order.tolist()
-    b = list(g.baseline[order])
-    ex = list(g.ex[order])
-    ey = list(g.ey[order])
-    xx = list(g.x[order])
-    ww = list(g.w[order])
-    st = g.style[order].tolist()
-    blut = break_lut
+    x, y, w, h = g.x[order], g.y[order], g.w[order], g.h[order]
+    ex, ey = g.ex[order], g.ey[order]
+    style = g.style[order]
+    origin = g.origin[order]
+    texts = [g.text[i] for i in order.tolist()]
 
-    out: List[_Word] = []
-    line: List[int] = []
-    baseline = _F0
-    max_y = _F32_TINY
-    max_x = _F0
-    cur_style = -1
+    ls = np.asarray(
+        _line_starts(x, w, ex, ey, g.baseline[order], style, break_lut), dtype=np.int64
+    )
+    n_lines = ls.size
+    line_len = np.diff(np.append(ls, m))
+    lid = np.repeat(np.arange(n_lines), line_len)
 
-    for oi in range(m):
-        gb = b[oi]
-        if not line:
-            baseline = gb
-            max_x = ex[oi]
-            cur_style = st[oi]
+    blanks = {t for t in set(texts) if t.strip() == ""}
+    if blanks:
+        blank = np.fromiter((t in blanks for t in texts), dtype=bool, count=m)
+        is_sp = np.fromiter((t == " " for t in texts), dtype=bool, count=m)
+        has_sp = np.logical_or.reduceat(is_sp, ls)
+    else:
+        blank = is_sp = np.zeros(m, dtype=bool)
+        has_sp = np.zeros(n_lines, dtype=bool)
 
-        stop = False
-        if baseline != gb and gb > max_y:
-            stop = True
-        else:
-            gx = xx[oi]
-            gw = ww[oi]
-            # not is_within_variance(max_x, gx, gw)
-            if max_x != gx and not ((max_x - gw) <= gx and (max_x + gw) >= gx):
-                stop = True
-            elif blut[st[oi], cur_style]:
-                stop = True
+    xs = style_xsize[style[ls]]
+    font_size = np.where(xs == 0, 10, xs).astype(np.float32)
+    limit = _F08 * font_size / FONT_DENOM
 
-        if stop:
-            if line:
-                out.extend(_make_words_in_line(g, line, mode, style_xsize))
-                line = []
-            baseline = gb
-            max_y = ey[oi]
-            cur_style = st[oi]
+    # W2: pair j joins glyphs j and j+1; `inner` marks pairs within a line
+    inner = lid[1:] == lid[:-1]
+    d = _pair_distances(x, y, w, h, ex, ey)
+    pline = lid[:-1]
+    if mode == "legacy":
+        char_spacing = np.zeros(n_lines, dtype=np.float32)
+        for li in np.nonzero(~has_sp & (line_len > 1))[0].tolist():
+            char_spacing[li] = _approximate_char_spacing(d[ls[li]:ls[li] + line_len[li] - 1])
+    else:
+        sel = inner & ~has_sp[pline]
+        cut = _boundary_cuts(d[sel], pline[sel], n_lines, font_size)
+        char_spacing = cut - limit
+    boundary = np.where(
+        has_sp[pline],
+        blank[1:] | blank[:-1],
+        (d - char_spacing[pline]) > limit[pline],
+    ) | ~inner
 
-        line.append(oidx[oi])
-        exi = ex[oi]
-        if exi > max_y:
-            max_y = exi  # reference quirk: maxY tracks endX
-        max_x = exi
+    starts_new = np.empty(m, dtype=bool)
+    starts_new[0] = True
+    starts_new[1:] = boundary
+    gs = np.nonzero(starts_new)[0]
+    ge = np.append(gs[1:], m) - 1
+    x1g = x[gs][np.cumsum(starts_new) - 1]
 
-    if line:
-        out.extend(_make_words_in_line(g, line, mode, style_xsize))
-    return out
+    # per-line fast-path preconditions; a failing line takes the exact fold
+    y0, h0 = y[ls], h[ls]
+    bad = (
+        (blank & ~is_sp) | ~(w > _F0) | ~(h > _F0)
+        | ~(y == y0[lid]) | ~(h == h0[lid])
+        | ~(x1g + (ex - x1g) == ex)
+    )
+    bad_pair = inner & ((np.diff(x) < 0) | (np.diff(ex) < 0))
+    line_bad = (
+        np.logical_or.reduceat(bad, ls)
+        | (np.bincount(pline[bad_pair], minlength=n_lines) > 0)
+        # y-axis union fixpoint: h after the first combine is f32(ey - y)
+        | ((y0 + h0) - y0 != h0)
+    )
 
+    keep = ~line_bad[lid[gs]] & ~blank[gs]
+    s, e = gs[keep], ge[keep]
+    # word texts are slices of the page's joined glyph texts (a glyph may
+    # carry more than one char)
+    flat = "".join(texts)
+    co = np.zeros(m + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, texts), dtype=np.int64, count=m), out=co[1:])
+    word_text = [flat[a:b] for a, b in zip(co[s].tolist(), co[e + 1].tolist())]
+    ww = np.where(e == s, w[s], ex[e] - x[s])
 
-# ------------------------------------------------------------------ word table
+    folded = []
+    fold_line = []
+    for li in np.nonzero(line_bad)[0].tolist():
+        a = int(ls[li])
+        words = _fold_line_words(
+            x, y, w, h, ex, ey, texts, style, origin, a, a + int(line_len[li]),
+            bool(has_sp[li]), char_spacing[li], limit[li],
+        )
+        folded.extend(words)
+        fold_line.extend([li] * len(words))
+    # one stable sort by line puts each line's words back in line order
+    by_line = np.argsort(
+        np.concatenate([lid[s], np.asarray(fold_line, dtype=np.int64)]), kind="stable"
+    ).tolist()
+    cols = list(zip(*folded)) if folded else [()] * 7
 
-@dataclass
-class _WordTable:
-    x: np.ndarray
-    y: np.ndarray
-    w: np.ndarray
-    h: np.ndarray
-    ex: np.ndarray
-    ey: np.ndarray
-    style: np.ndarray     # int32
-    text: List[str]
-    tlen: np.ndarray      # int64 len(text)
-    origin: np.ndarray    # int64
+    def merged(fast, fold, dtype):
+        return np.concatenate([fast, np.asarray(fold, dtype=dtype)])[by_line]
 
-    def __len__(self) -> int:
-        return len(self.text)
-
-
-def _word_table(words: List[_Word]) -> _WordTable:
-    x = np.array([wd.x for wd in words], dtype=np.float32)
-    y = np.array([wd.y for wd in words], dtype=np.float32)
-    w = np.array([wd.w for wd in words], dtype=np.float32)
-    h = np.array([wd.h for wd in words], dtype=np.float32)
-    return _WordTable(
-        x=x, y=y, w=w, h=h, ex=x + w, ey=y + h,
-        style=np.array([wd.style for wd in words], dtype=np.int32),
-        text=[wd.text for wd in words],
-        tlen=np.array([len(wd.text) for wd in words], dtype=np.int64),
-        origin=np.array([wd.origin for wd in words], dtype=np.int64),
+    all_text = word_text + list(cols[4])
+    return _word_table(
+        merged(x[s], cols[0], np.float32),
+        merged(y[s], cols[1], np.float32),
+        merged(ww, cols[2], np.float32),
+        merged(h[s], cols[3], np.float32),
+        merged(style[s], cols[5], np.int32),
+        [all_text[i] for i in by_line],
+        merged(origin[s], cols[6], np.int64),
     )
 
 
@@ -469,6 +506,14 @@ Line = List[int]
 
 def _line_pos(t: _WordTable, line: Line) -> Tuple[np.float32, np.float32, np.float32, np.float32]:
     """Pairwise bbox-union fold in list order (== oracle Line.pos)."""
+    key = tuple(line)
+    pos = t.pos_memo.get(key)
+    if pos is None:
+        pos = t.pos_memo[key] = _union_fold(t, line)
+    return pos
+
+
+def _union_fold(t: _WordTable, line: Line) -> Tuple[np.float32, np.float32, np.float32, np.float32]:
     i0 = line[0]
     x, y, w, h = t.x[i0], t.y[i0], t.w[i0], t.h[i0]
     for i in line[1:]:
@@ -489,13 +534,21 @@ def _line_pos(t: _WordTable, line: Line) -> Tuple[np.float32, np.float32, np.flo
 def _dominating_style(t: _WordTable, idxs: Line) -> int:
     """B8 letter-count-weighted mode; ties -> earliest first appearance.
     FORMULA override for mathy lines (mirrors oracle Line.dominating_style)."""
-    if math_score_exceeds([t.text[i] for i in idxs]):
+    key = tuple(idxs)
+    st = t.style_memo.get(key)
+    if st is None:
+        st = t.style_memo[key] = _weighted_mode(t, idxs)
+    return st
+
+
+def _weighted_mode(t: _WordTable, idxs: Line) -> int:
+    texts = [t.text[i] for i in idxs]
+    if math_score_exceeds(texts):
         return FORMULA_IDX
     weights: Dict[int, int] = {}
     order: Dict[int, int] = {}
-    for pos, i in enumerate(idxs):
-        s = int(t.style[i])
-        weights[s] = weights.get(s, 0) + len(t.text[i])
+    for pos, (s, text) in enumerate(zip(t.style[idxs].tolist(), texts)):
+        weights[s] = weights.get(s, 0) + len(text)
         if s not in order:
             order[s] = pos
     return max(weights, key=lambda s: (weights[s], -order[s]))
@@ -571,24 +624,29 @@ def _create_lines(
 
     boundaries = find_line_boundaries(counts.tolist())
 
-    # window assignment, vectorized per boundary window; first window wins,
-    # within-window order = stable y sort (== oracle's ordered scan)
+    # window assignment; first window wins, within-window order = stable y
+    # sort (== oracle's ordered scan). Window starts and stops never
+    # decrease, so the windows a word fits are the ones whose stop admits
+    # its endY (a suffix) and whose start admits its y (a prefix): the first
+    # window it fits is the first whose stop admits it, if its start does.
     ordered = idx[np.argsort(t.y[idx], kind="stable")]
     yf_ord = t.y[ordered]
-    eyf_ord = t.ey[ordered]
-    unassigned = np.ones(n, dtype=bool)
-    lines: List[Line] = []
-    for bi in range(len(boundaries) - 1):
-        start = min_y + boundaries[bi] - 1
-        stop = min_y + boundaries[bi + 1]
-        sel = np.nonzero(unassigned & (yf_ord > start - 1) & (eyf_ord < stop + 1))[0]
-        if sel.size:
-            unassigned[sel] = False
-            lines.append([int(i) for i in ordered[sel]])
+    bnd = np.asarray(boundaries, dtype=np.int64)
+    win_start = min_y + bnd[:-1] - 1
+    win = np.searchsorted(min_y + bnd[1:] + 1, t.ey[ordered], side="right")
+    fits = np.nonzero(win < win_start.size)[0]
+    fits = fits[yf_ord[fits] > win_start[win[fits]] - 1]
+    by_win = fits[np.argsort(win[fits], kind="stable")]
+    cuts = (np.nonzero(np.diff(win[by_win]))[0] + 1).tolist()
+    words = ordered[by_win].tolist()
+    lines: List[Line] = [
+        words[a:b] for a, b in zip([0] + cuts, cuts + [len(words)]) if b > a
+    ]
 
     _combine_lines(t, lines)
+    x_of = t.x.tolist().__getitem__  # exact copies: the sort only compares
     for line in lines:
-        line.sort(key=lambda i: t.x[i])  # B4 in-line order, stable
+        line.sort(key=x_of)  # B4 in-line order, stable
     return lines
 
 
@@ -640,31 +698,32 @@ def _modal_vertical_spacing(
     limit = int(avg_y) * 3
     if limit <= 0:
         limit = 1
-    hist = np.zeros(limit, dtype=np.int64)
 
     rx, ry, rw, rh = region
     ii = np.asarray(all_idx, dtype=np.int64)
     wx, wy, wex, wey = t.x[ii], t.y[ii], t.ex[ii], t.ey[ii]
 
+    slab_x = []
     x = float(rx)
     step = float(rw) / 3.0
     if step <= 0.0:
         step = 1.0
     end_x = float(rx + rw)
     while x <= end_x:
-        ix = int(x)
-        sx = np.float32(float(ix))
-        sy = np.float32(float(ry))
-        sex = sx + np.float32(1.0)
-        sey = sy + np.float32(float(rh))
-        mask = ~(wex < sx) & ~(wx > sex) & ~(wy > sey) & (wey > sy)
-        sel = np.nonzero(mask)[0]
-        if sel.size > 1:
-            order = sel[np.argsort(wy[sel], kind="stable")]
-            d = (wy[order][1:] - wey[order][:-1]).astype(np.int64)
-            d = d[(d > 0) & (d < limit)]
-            np.add.at(hist, d, 1)
+        slab_x.append(float(int(x)))
         x += step
+    # every 1px-wide slab at once: the words each one cuts, y-sorted within
+    # the slab (stable), and the gaps between consecutive ones
+    sx = np.asarray(slab_x, dtype=np.float32)[:, None]
+    sy = np.float32(float(ry))
+    sey = sy + np.float32(float(rh))
+    cut = ~(wex < sx) & ~(wx > sx + np.float32(1.0)) & ~(wy > sey) & (wey > sy)
+    slab, word = np.nonzero(cut)
+    order = np.lexsort((wy[word], slab))
+    slab, word = slab[order], word[order]
+    same = slab[1:] == slab[:-1]
+    d = (wy[word[1:]] - wey[word[:-1]]).astype(np.int64)
+    hist = np.bincount(d[same & (d > 0) & (d < limit)], minlength=limit)
 
     index = -1
     if limit > 2:
@@ -695,12 +754,6 @@ def _segment_paragraphs(
     """Oracle paragraphs.segment_paragraphs (B5 fold)."""
     if not lines:
         return []
-    from ..oracle.style import (  # local import to keep constants in one place
-        SAME_STYLE,
-        SAME_STYLE_AND_BIG_TEXT,
-        SUBTLE_DIFFERENCE,
-    )
-
     gap_15 = np.float32(mvs * 1.5)
     gap_11 = np.float32(mvs * 1.1)
 
@@ -814,8 +867,6 @@ def _analyze_page_vec(
             if not bool(np.any((wy < sep_y) & (wey > sep_y))):
                 hsep_ys.append(sep_y)
         media_obs = (mx, my, mx + mw, my + mh)
-
-    from ..oracle.style import SAME_STYLE
 
     regions = analyze_page_regions(
         (x0, y0, x1, y1), wx, wy, wex, wey, t.tlen, hsep_ys, min_col, min_row,
@@ -1126,16 +1177,13 @@ def _analyze_one_page(
     """One page's chars -> (word table, paragraphs, region bounds, block
     bounds, captions). Page-local by construction — this is the unit the
     page-parallel path distributes (operators/extract_paged.py)."""
-    words = _segment_words_page(g, break_lut, style_xsize, mode)
-    t = _word_table(words)
+    t = _segment_words_page(g, break_lut, style_xsize, mode)
     # P2/P1/B7: text fully inside a CONTAINER graphic leaves the page
     # flow; its lines re-attach to the media at emission (mirror of
     # oracle._analyze_page's extraction)
     captions: Dict[int, List[Tuple[str, int]]] = {}
     page_roles = None
     if page_media and len(t):
-        from ..oracle.regions import MEDIA_CONTAINER
-
         roles, synth_hseps = categorize_media_combined(
             np.array([m.x for m in page_media], dtype=np.float32),
             np.array([m.y for m in page_media], dtype=np.float32),
@@ -1166,8 +1214,7 @@ def _analyze_one_page(
                 for line in cap_lines
             ]
         if bool(pulled.any()):
-            keep = [w for w, pl in zip(words, pulled) if not pl]
-            t = _word_table(keep)
+            t = _take_words(t, ~pulled)
     paragraphs, bounds, blocks = _analyze_page_vec(
         t, page_media, cmp_lut, style_xsize, style_ysize,
         page_height=cfg.page_height, media_roles=page_roles,
@@ -1210,8 +1257,10 @@ def extract_document_fast(
     page_regions: List[List] = []
     page_blocks: List[List] = []
     page_captions: List[Dict[int, List[Tuple[str, int]]]] = []
+    slices = _page_slices(table.page)
+    no_chars = np.empty(0, dtype=np.int64)
     for p in range(n_pages):
-        g = _page_glyphs(table, table.page == p)
+        g = _glyphs_at(table, slices.get(p, no_chars))
         t, paragraphs, bounds, blocks, captions = _analyze_one_page(
             g, media_by_page.get(p, []), cmp_lut, break_lut,
             style_xsize, style_ysize, cfg, mode,

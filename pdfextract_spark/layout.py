@@ -30,11 +30,12 @@ import hashlib
 import re
 import unicodedata
 from dataclasses import dataclass
-from typing import Dict, List, Sequence, Tuple
+from typing import List, Sequence, Tuple
 
 import numpy as np
 
 from .config import CONFIG, EngineConfig
+from .oracle.blocks import math_score_exceeds
 from .oracle.style import Style
 
 F32 = np.float32
@@ -99,11 +100,6 @@ def _control_ratio(text: str) -> float:
     return ctrl / len(text)
 
 
-def _is_formula_text(words) -> bool:
-    from .oracle.blocks import math_score_exceeds
-
-    return math_score_exceeds(words)
-
 _HEADING_RE = re.compile(r"^\d+(\.\d+)* [A-Z]")
 _FOOTNOTE_RE = re.compile(r"^\d+ [a-z]")
 
@@ -112,11 +108,39 @@ def _is_pagenum_text(text: str) -> bool:
     return 0 < len(text) <= 4 and text.isdigit()
 
 
-def is_two_col(doc_id: str) -> bool:
-    """Whether layout_document flows this doc in two columns (same first rng
-    draw as layout_document — keep in sync)."""
-    rng = np.random.Generator(np.random.PCG64(doc_seed(doc_id)))
+def _doc_rng(doc_id: str) -> np.random.Generator:
+    return np.random.Generator(np.random.PCG64(doc_seed(doc_id)))
+
+
+def _draw_two_col(rng: np.random.Generator) -> bool:
+    """The first draw of every document's stream: 25% of documents flow in
+    two columns (exercises P3-P5 column detection)."""
     return bool(rng.uniform() < 0.25)
+
+
+def is_two_col(doc_id: str) -> bool:
+    """Whether layout_document flows this doc in two columns."""
+    return _draw_two_col(_doc_rng(doc_id))
+
+
+def _span_style(text: str, prev_text: str, seen_text: bool) -> int:
+    if not seen_text:
+        return HEADING
+    if _control_ratio(text) > 0.2:
+        return GARBLED
+    if _is_pagenum_text(text):
+        return SMALL
+    if _HEADING_RE.match(text):
+        return H2 if "." in text.split(" ", 1)[0] else HEADING
+    if _FOOTNOTE_RE.match(text):
+        return SMALL
+    if text == "Abstract" or prev_text == "Abstract":
+        return SMALL
+    return BODY
+
+
+# plan entry kinds (first field of each entry)
+_MEDIA, _CAPTION, _PAGENUM, _FLOW = range(4)
 
 
 def layout_document(
@@ -128,138 +152,176 @@ def layout_document(
     cfg: EngineConfig = CONFIG,
 ) -> Tuple[CharTable, List[MediaBox], List[Style]]:
     """Deterministically position every span's glyphs. Spans must be given in
-    offset order (the caller sorts)."""
+    offset order (the caller sorts).
+
+    Three passes: a per-span plan that consumes the random stream; the
+    flowed words' kerning, widths and gaps computed in bulk; then the scalar
+    float32 cursor walk (line, column and page breaks) per word."""
     styles = doc_styles(doc_id)
-    rng = np.random.Generator(np.random.PCG64(doc_seed(doc_id)))
+    rng = _doc_rng(doc_id)
+    two_col = _draw_two_col(rng)
 
     margin = F32(cfg.page_margin)
     page_w = F32(cfg.page_width)
     page_h = F32(cfg.page_height)
+    bottom = page_h - margin
     body_y = styles[BODY].y_size
     leading = F32(cfg.line_leading_factor * body_y)
+    # the gutter between columns is the whitespace the engine must recover
+    gutter = F32(cfg.column_gutter)
+    if two_col:
+        col_w = F32((page_w - 2 * margin - gutter) / F32(2.0))
+    else:
+        col_w = F32(page_w - 2 * margin)
+    col_x0s = [F32(margin + c * F32(col_w + gutter)) for c in (0, 1)]
+    sizes = [F32(s.x_size) for s in styles]
+    char_ws = [F32(cfg.char_aspect * s) for s in sizes]
 
-    # per-word x chunks + scalar per-word metadata; one np.repeat batch at the
-    # end materializes the char table (vectorized emission, no per-char loops)
-    x_chunks: List[np.ndarray] = []
+    # Every draw after the two-column one comes from one bulk buffer, in the
+    # order the scalar draws would be made: 3 per span, then k per flowed
+    # word of k chars (k - 1 kerning jitters, then the word gap). Whether a
+    # text span flows is known only while planning (a caption depends on the
+    # size drawn for the media box before it), so the buffer has an upper
+    # bound and the generator is rewound to the draws used before the
+    # trailing watermark draws. `lo + (hi - lo) * random()` is what
+    # Generator.uniform computes, so the values are bit-identical.
+    n = len(kinds)
+    bitgen = rng.bit_generator
+    state = bitgen.state
+    buf = rng.random(3 * n + sum(len(texts[i] or "") for i in range(n)))
+    span_draws = buf.tolist()
+
+    # ---- pass 1: plan every span, consuming the stream
+    plan: list = []
+    flow_words: List[str] = []
+    flow_draw: List[int] = []    # index in buf of each flowed word's first draw
+    flow_style: List[int] = []
+    pos = 0
+    seen_text = False
+    box_w = box_h = F32(0.0)     # size of the latest media box
+    for i in range(n):
+        d0, d1, d2 = span_draws[pos:pos + 3]
+        pos += 3
+        if kinds[i] == "media":
+            if "/rule" in (media_refs[i] or ""):
+                # table rule: deterministic thin full-width bar, stacked
+                # tightly under the previous row (repeated-hsep combining
+                # fodder — GraphicSegmentatorImpl.combineHorizontalSeparators)
+                box_w, box_h = F32(col_w * F32(0.8)), F32(3.0)
+                plan.append((_MEDIA, i, box_w, box_h, True, F32(0.0), F32(8.0)))
+            elif i > 0 and kinds[i - 1] == "text" and math_score_exceeds(
+                (texts[i - 1] or "").split(" ")
+            ):
+                # fraction bar under a formula: thin, formula-indented,
+                # tight leading so the denominator stays within the P2
+                # MATH_BAR lookaround (GraphicSegmentatorImpl:99-146)
+                box_w, box_h = F32(90.0 + d0 * 30.0), F32(2.0 + d1 * 2.0)
+                plan.append((_MEDIA, i, box_w, box_h, False, F32(30.0), F32(6.0)))
+            else:
+                if d2 < 0.25:
+                    # separator-shaped media (thin horizontal bar; P2 HSEP role)
+                    box_w, box_h = F32(col_w * F32(0.8)), F32(3.0 + d1 * 3.0)
+                else:
+                    box_w = F32(min(float(F32(100.0 + d0 * 300.0)), float(col_w)))
+                    box_h = F32(60.0 + d1 * 140.0)
+                plan.append((_MEDIA, i, box_w, box_h, True, F32(0.0), leading))
+            continue
+
+        text = texts[i] or ""
+        if not text:
+            continue
+        # figure caption: a "fig." span right after a media span renders
+        # INSIDE that media box (>=5 words fully contained -> P2 classifies
+        # the graphic as CONTAINER; B7 re-attaches the caption to the media)
+        if (
+            i > 0 and kinds[i - 1] == "media" and text.startswith("fig.")
+            and box_h >= 80.0 and box_w >= 140.0
+        ):
+            plan.append((_CAPTION, i))
+            seen_text = True
+            continue
+
+        st = _span_style(text, texts[i - 1] if i > 0 else "", seen_text)
+        if st == SMALL and seen_text and _is_pagenum_text(text):
+            plan.append((_PAGENUM, i, st))
+            continue
+        seen_text = True
+        words = [wd for wd in text.split(" ") if wd != ""]
+        w0 = len(flow_words)
+        for wd in words:
+            flow_words.append(wd)
+            flow_draw.append(pos)
+            flow_style.append(st)
+            pos += len(wd)
+        plan.append((
+            _FLOW, i, st, w0, len(flow_words),
+            # bold-by-overstrike: ~4% of body spans re-render their first
+            # word at the identical position (S6 overprint-dedup fodder)
+            st == BODY and d0 < 0.04,
+            # paragraph gap before ~35% of body spans (and after the title)
+            st == HEADING or d2 < 0.35,
+            # display formulas are indented (B2 only detects indented
+            # line-sets, ContentGrouper.java:182 — minX >= region.x + 20)
+            F32(30.0) if math_score_exceeds(words) else F32(0.0),
+        ))
+    bitgen.state = state
+    bitgen.advance(pos)
+
+    # ---- pass 2: every flowed word's widths, advances and gap in bulk
+    word_w, advs, gaps, word_at = _flow_metrics(
+        flow_words, flow_draw, flow_style, buf, sizes, char_ws
+    )
+
+    # ---- pass 3: the cursor walk. Per-char x values, plus per-run metadata
+    # that one np.repeat batch expands into the char table at the end.
+    xs: list = []
     run_len: List[int] = []
     run_page: List[int] = []
-    run_y: List[np.float32] = []
-    run_cw: List[np.float32] = []
-    run_h: List[np.float32] = []
-    run_bl: List[np.float32] = []
+    run_y: list = []
+    run_cw: list = []
+    run_h: list = []
     run_st: List[int] = []
     run_off: List[int] = []
     run_rot: List[int] = []
     chars: List[str] = []
     media: List[MediaBox] = []
 
-    def emit_run(page_, px_arr, py, char_w_, ysize_, bl, st_, text_, offset_, rot_=0):
-        x_chunks.append(np.asarray(px_arr, dtype=np.float32))
+    def emit_run(page_, py, char_w_, ysize_, st_, text_, offset_, rot_=0):
         run_len.append(len(text_))
         run_page.append(page_)
         run_y.append(py)
         run_cw.append(char_w_)
         run_h.append(ysize_)
-        run_bl.append(bl)
         run_st.append(st_)
         run_off.append(offset_)
         run_rot.append(rot_)
         chars.extend(text_)
 
-    # 25% of documents flow in two columns (exercises P3-P5 column detection);
-    # the gutter between columns is the whitespace the engine must recover.
-    two_col = bool(rng.uniform() < 0.25)
-    gutter = F32(cfg.column_gutter)
-    if two_col:
-        col_w = F32((page_w - 2 * margin - gutter) / F32(2.0))
-    else:
-        col_w = F32(page_w - 2 * margin)
-
     page = 0
     col = 0
     cursor_y = margin  # top of the next line box
-    seen_text = False
 
-    def col_x0() -> np.float32:
-        return F32(margin + col * F32(col_w + gutter))
-
-    def advance_column():
-        """Column full: next column on the same page, else next page."""
-        nonlocal page, col, cursor_y
-        if two_col and col == 0:
-            col = 1
-        else:
-            page += 1
-            col = 0
-        cursor_y = margin
-
-    n = len(kinds)
-    for i in range(n):
-        kind = kinds[i]
+    for entry in plan:
+        kind, i = entry[0], entry[1]
         offset = int(offsets[i])
-        # one draw per span regardless of kind, keeps the stream aligned
-        draws = rng.uniform(0.0, 1.0, 3)
-
-        if kind == "media":
-            if "/rule" in (media_refs[i] or ""):
-                # table rule: deterministic thin full-width bar, stacked
-                # tightly under the previous row (repeated-hsep combining
-                # fodder — GraphicSegmentatorImpl.combineHorizontalSeparators)
-                mw = F32(col_w * F32(0.8))
-                mh = F32(3.0)
-                if cursor_y + mh > page_h - margin:
-                    advance_column()
-                media.append(
-                    MediaBox(page, float(col_x0()), float(cursor_y),
-                             float(mw), float(mh), media_refs[i] or "", offset)
-                )
-                cursor_y = F32(cursor_y + mh + F32(8.0))
-                continue
-            if i > 0 and kinds[i - 1] == "text" and _is_formula_text(
-                (texts[i - 1] or "").split(" ")
-            ):
-                # fraction bar under a formula: thin, formula-indented,
-                # tight leading so the denominator stays within the P2
-                # MATH_BAR lookaround (GraphicSegmentatorImpl:99-146)
-                mw = F32(90.0 + draws[0] * 30.0)
-                mh = F32(2.0 + draws[1] * 2.0)
-                media.append(
-                    MediaBox(page, float(F32(col_x0() + F32(30.0))), float(cursor_y),
-                             float(mw), float(mh), media_refs[i] or "", offset)
-                )
-                cursor_y = F32(cursor_y + mh + F32(6.0))
-                continue
-            if draws[2] < 0.25:
-                # separator-shaped media (thin horizontal bar; P2 HSEP role)
-                mw = F32(col_w * F32(0.8))
-                mh = F32(3.0 + draws[1] * 3.0)
-            else:
-                mw = F32(min(float(F32(100.0 + draws[0] * 300.0)), float(col_w)))
-                mh = F32(60.0 + draws[1] * 140.0)
-            if cursor_y + mh > page_h - margin:
-                advance_column()
+        if kind == _MEDIA:
+            _, _, mw, mh, may_break, dx, gap = entry
+            if may_break and cursor_y + mh > bottom:
+                # column full: next column on the same page, else next page
+                if two_col and col == 0:
+                    col = 1
+                else:
+                    page, col = page + 1, 0
+                cursor_y = margin
             media.append(
-                MediaBox(page, float(col_x0()), float(cursor_y), float(mw), float(mh),
-                         media_refs[i] or "", offset)
+                MediaBox(page, float(F32(col_x0s[col] + dx)), float(cursor_y),
+                         float(mw), float(mh), media_refs[i] or "", offset)
             )
-            cursor_y = F32(cursor_y + mh + leading)
+            cursor_y = F32(cursor_y + mh + gap)
             continue
 
-        text = texts[i] or ""
-        if not text:
-            continue
-
-        # figure caption: a "fig." span right after a media span renders
-        # INSIDE that media box (>=5 words fully contained -> P2 classifies
-        # the graphic as CONTAINER; B7 re-attaches the caption to the media)
-        if (
-            i > 0
-            and kinds[i - 1] == "media"
-            and text.startswith("fig.")
-            and media
-            and media[-1].h >= 80.0
-            and media[-1].w >= 140.0
-        ):
+        text = texts[i]
+        if kind == _CAPTION:
             box = media[-1]
             cap_style = styles[SMALL]
             cap_size = F32(cap_style.x_size)
@@ -276,109 +338,61 @@ def layout_document(
                     cy = F32(cy + F32(cfg.line_leading_factor * cap_style.y_size))
                 if cy + cap_h > box.y + box.h - 2.0:
                     break  # box full; remaining words dropped from render
-                pxs = []
                 px = cx
                 for _c in word:
-                    pxs.append(px)
+                    xs.append(px)
                     px = F32(px + cap_cw)
-                emit_run(
-                    box.page, pxs, cy, cap_cw, cap_h, F32(cy + cap_h),
-                    SMALL, word, offset,
-                )
+                emit_run(box.page, cy, cap_cw, cap_h, SMALL, word, offset)
                 cx = F32(px + F32(0.3 * float(cap_size)))
-            seen_text = True
             continue
 
-        prev_text = texts[i - 1] if i > 0 else ""
-        if not seen_text:
-            st = HEADING
-        elif _control_ratio(text) > 0.2:
-            st = GARBLED
-        elif _is_pagenum_text(text):
-            st = SMALL
-        elif _HEADING_RE.match(text):
-            st = H2 if "." in text.split(" ", 1)[0] else HEADING
-        elif _FOOTNOTE_RE.match(text):
-            st = SMALL
-        elif text == "Abstract" or prev_text == "Abstract":
-            st = SMALL
-        else:
-            st = BODY
-
-        style = styles[st]
-        size = F32(style.x_size)
-        ysize = F32(style.y_size)
-        char_w = F32(cfg.char_aspect * size)
-
-        if st == SMALL and seen_text and _is_pagenum_text(text):
+        st = entry[2]
+        size = sizes[st]
+        ysize = F32(styles[st].y_size)
+        char_w = char_ws[st]
+        if kind == _PAGENUM:
             # page-number analog: bottom-centre of the CURRENT page, no flow
             py = F32(page_h - F32(30.0))
             px = F32(page_w / F32(2.0))
-            pxs = []
             for _ch in text:
-                pxs.append(px)
+                xs.append(px)
                 px = F32(px + char_w + F32(0.02 * size))
-            emit_run(page, pxs, py, char_w, ysize, F32(py + ysize), st, text, offset)
+            emit_run(page, py, char_w, ysize, st, text, offset)
             continue
 
-        seen_text = True
-
-        # bold-by-overstrike: ~4% of body spans re-render their first word
-        # at the identical position (S6 overprint-dedup fodder)
-        overprint = st == BODY and draws[0] < 0.04
-
-        # paragraph gap before ~35% of body spans (and after the title)
-        para_break = st == HEADING or draws[2] < 0.35
+        _, _, _, w0, w1, overprint, para_break, indent = entry
         if para_break and cursor_y > margin:
             cursor_y = F32(cursor_y + leading)
-
-        # display formulas are indented (B2 only detects indented line-sets,
-        # ContentGrouper.java:182 — minX >= region.x + 20)
-        words = [wd for wd in text.split(" ") if wd != ""]
-        indent = F32(30.0) if _is_formula_text(words) else F32(0.0)
-
-        def sx0() -> np.float32:
-            return F32(col_x0() + indent)
-
         # flow the span's words into lines (within the current column)
-        cursor_x = sx0()
-        for wi, word in enumerate(words):
-            jit = rng.uniform(-0.05, 0.05, max(len(word) - 1, 0)).astype(np.float32) * size
-            word_w = F32(len(word) * char_w + (jit.sum() if len(jit) else F32(0.0)))
-            if cursor_x + word_w > col_x0() + col_w and cursor_x > sx0():
-                cursor_x = sx0()
+        sx0 = F32(col_x0s[col] + indent)
+        limit = col_x0s[col] + col_w
+        cursor_x = sx0
+        for w in range(w0, w1):
+            if cursor_x + word_w[w] > limit and cursor_x > sx0:
+                cursor_x = sx0
                 cursor_y = F32(cursor_y + leading)
-            if cursor_y + ysize > page_h - margin:
-                advance_column()
-                cursor_x = sx0()
-            # per-char advance fold == float32 cumsum (verified bit-exact):
-            # adv_i = f32(char_w + jit_i) for all but the last char, then
-            # char_w. Combining marks (S7 fodder) advance ZERO — the mark
-            # renders on top of its base char, like a PDF putting diacritics
-            # in a separate Tj element.
-            k = len(word)
-            arr = np.empty(k + 1, dtype=np.float32)
-            arr[0] = cursor_x
-            if k > 1:
-                arr[1:k] = char_w + jit
-                comb = np.fromiter(
-                    (unicodedata.combining(c) != 0 for c in word), dtype=bool, count=k
-                )
-                arr[1:k][comb[1:]] = F32(0.0)
-            arr[k] = char_w
-            walk = np.cumsum(arr)
-            emit_run(
-                page, walk[:k], cursor_y, char_w, ysize,
-                F32(cursor_y + ysize), st, word, offset,
-            )
-            if overprint and wi == 0:
-                emit_run(
-                    page, walk[:k], cursor_y, char_w, ysize,
-                    F32(cursor_y + ysize), st, word, offset,
-                )
-            gx = walk[k]
-            word_gap = F32((0.28 + float(rng.uniform(0.0, 0.08))) * float(size))
-            cursor_x = F32(gx + word_gap)
+            if cursor_y + ysize > bottom:
+                if two_col and col == 0:
+                    col = 1
+                else:
+                    page, col = page + 1, 0
+                cursor_y = margin
+                sx0 = F32(col_x0s[col] + indent)
+                limit = col_x0s[col] + col_w
+                cursor_x = sx0
+            # per-char advance fold in float32: a combining mark (S7
+            # fodder) advances ZERO and renders on top of its base char,
+            # like a PDF putting diacritics in a separate Tj element
+            word = flow_words[w]
+            x = cursor_x
+            for a in advs[word_at[w]:word_at[w + 1]]:
+                xs.append(x)
+                x = x + a
+            emit_run(page, cursor_y, char_w, ysize, st, word, offset)
+            if overprint and w == w0:
+                xs.extend(xs[-len(word):])
+                emit_run(page, cursor_y, char_w, ysize, st, word, offset)
+            cursor_x = F32(x + gaps[w])
         # span ends -> next span starts a new line
         cursor_y = F32(cursor_y + leading)
 
@@ -389,42 +403,67 @@ def layout_document(
     if rng.uniform() < 0.35 and seen_text:
         wm = "do not distribute".split(" ")[int(rng.integers(0, 3))]
         wy = F32(page_h - F32(12.0))
-        pxs = []
         px = F32(margin)
         cw = F32(cfg.char_aspect * styles[SMALL].x_size)
         for _c in wm:
-            pxs.append(px)
+            xs.append(px)
             px = F32(px + cw)
-        emit_run(
-            0, pxs, wy, cw, F32(styles[SMALL].y_size),
-            F32(wy + F32(styles[SMALL].y_size)), SMALL, wm, 0, rot_=90,
-        )
+        emit_run(0, wy, cw, F32(styles[SMALL].y_size), SMALL, wm, 0, rot_=90)
 
-    if x_chunks:
-        lens = np.asarray(run_len, dtype=np.int64)
-        table = CharTable(
-            page=np.repeat(np.asarray(run_page, dtype=np.int32), lens),
-            x=np.concatenate(x_chunks),
-            y=np.repeat(np.asarray(run_y, dtype=np.float32), lens),
-            w=np.repeat(np.asarray(run_cw, dtype=np.float32), lens),
-            h=np.repeat(np.asarray(run_h, dtype=np.float32), lens),
-            baseline=np.repeat(np.asarray(run_bl, dtype=np.float32), lens),
-            style_idx=np.repeat(np.asarray(run_st, dtype=np.int32), lens),
-            offset=np.repeat(np.asarray(run_off, dtype=np.int32), lens),
-            char=chars,
-            rot=np.repeat(np.asarray(run_rot, dtype=np.int16), lens),
-        )
-    else:
-        table = CharTable(
-            page=np.empty(0, dtype=np.int32),
-            x=np.empty(0, dtype=np.float32),
-            y=np.empty(0, dtype=np.float32),
-            w=np.empty(0, dtype=np.float32),
-            h=np.empty(0, dtype=np.float32),
-            baseline=np.empty(0, dtype=np.float32),
-            style_idx=np.empty(0, dtype=np.int32),
-            offset=np.empty(0, dtype=np.int32),
-            char=chars,
-            rot=np.empty(0, dtype=np.int16),
-        )
+    lens = np.asarray(run_len, dtype=np.int64)
+    y = np.repeat(np.asarray(run_y, dtype=np.float32), lens)
+    h = np.repeat(np.asarray(run_h, dtype=np.float32), lens)
+    table = CharTable(
+        page=np.repeat(np.asarray(run_page, dtype=np.int32), lens),
+        x=np.asarray(xs, dtype=np.float32),
+        y=y,
+        w=np.repeat(np.asarray(run_cw, dtype=np.float32), lens),
+        h=h,
+        baseline=y + h,
+        style_idx=np.repeat(np.asarray(run_st, dtype=np.int32), lens),
+        offset=np.repeat(np.asarray(run_off, dtype=np.int32), lens),
+        char=chars,
+        rot=np.repeat(np.asarray(run_rot, dtype=np.int16), lens),
+    )
     return table, media, styles
+
+
+def _flow_metrics(words, first_draw, style, buf, sizes, char_ws):
+    """Bulk per-word metrics of the flowed words: the float32 width the wrap
+    test uses, the per-char advances (k per word: k - 1 kerned advances,
+    then char_w to the word's end), the float32 word gap, and each word's
+    first index into the advances. Bit-identical to drawing
+    uniform(-0.05, 0.05, k - 1) and uniform(0.0, 0.08) per word: the
+    kerning sum keeps the pairwise order of a 1-D float32 ``sum`` because
+    words are summed as the rows of one (m, k - 1) block per length."""
+    nw = len(words)
+    k = np.fromiter(map(len, words), dtype=np.int64, count=nw)
+    at = np.zeros(nw + 1, dtype=np.int64)
+    np.cumsum(k, out=at[1:])
+    total = int(at[-1])
+    st = np.asarray(style, dtype=np.int64)
+    size = np.asarray(sizes, dtype=np.float32)[st]
+    cw = np.asarray(char_ws, dtype=np.float32)[st]
+    draws = buf[np.repeat(np.asarray(first_draw, dtype=np.int64) - at[:-1], k)
+                + np.arange(total)]
+    last = at[1:] - 1
+    jit = (-0.05 + (0.05 - -0.05) * draws).astype(np.float32) * np.repeat(size, k)
+    adv = np.repeat(cw, k) + jit
+    jsum = np.zeros(nw, dtype=np.float32)
+    for kk in np.unique(k[k > 1]).tolist():
+        sel = np.nonzero(k == kk)[0]
+        jsum[sel] = jit[at[sel][:, None] + np.arange(kk - 1)].sum(axis=1)
+    # numpy scalar semantics of `len(word) * char_w + jit.sum()`: the int
+    # times float32 product and the sum are float64, rounded once to float32
+    width = (k * cw.astype(np.float64) + jsum.astype(np.float64)).astype(np.float32)
+    # a combining mark zeroes the advance INTO it; every combining class
+    # starts at U+0300, so only those code points are looked up
+    code = np.frombuffer(
+        "".join(words).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+    )
+    maybe = np.nonzero(code[1:] >= 0x300)[0]
+    adv[[j for j, c in zip(maybe.tolist(), code[maybe + 1].tolist())
+         if unicodedata.combining(chr(c))]] = F32(0.0)
+    adv[last] = cw
+    gap = ((0.28 + (0.0 + (0.08 - 0.0) * draws[last])) * size.astype(np.float64)).astype(np.float32)
+    return list(width), list(adv), list(gap), at.tolist()

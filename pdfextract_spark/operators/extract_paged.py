@@ -50,6 +50,7 @@ from ..engine.vectorized import (
     _analyze_one_page,
     _finalize_document,
     _Glyphs,
+    _page_slices,
     _style_luts,
     _WordTable,
 )
@@ -104,9 +105,9 @@ def _stage_a(batches: Iterator[pd.DataFrame], cfg: EngineConfig) -> Iterator[pd.
 
 
 def _pack_pages(doc_id: str, spans, cfg: EngineConfig) -> List[dict]:
-    """Char order within each page is the table order (the narrow path's
-    'ord'), preserved because the page mask is applied to an already-ordered
-    table; media is packed sorted by offset (what stage B's sort_values did)."""
+    """Char order within each page is the table order, as on the narrow
+    path (both split pages with _page_slices); media is packed sorted by
+    offset."""
     kinds, texts, refs, offs = _spans_to_lists(spans)
     order = np.argsort(np.asarray(offs, dtype=np.int64), kind="stable")
     kinds = [kinds[i] for i in order]
@@ -119,17 +120,7 @@ def _pack_pages(doc_id: str, spans, cfg: EngineConfig) -> List[dict]:
     for m in media:
         media_by_page.setdefault(int(m.page), []).append(m)
     chars = np.asarray(table.char, dtype=object)
-    # ONE stable argsort groups chars by page while preserving the
-    # in-page table order (a per-page boolean mask would be
-    # O(pages x chars) — ~10s for a 1k-page doc; this is O(n log n))
-    order = np.argsort(table.page, kind="stable")
-    sorted_pages = table.page[order]
-    page_vals = np.unique(sorted_pages)
-    starts = np.searchsorted(sorted_pages, page_vals, side="left")
-    ends = np.searchsorted(sorted_pages, page_vals, side="right")
-    slices = {
-        int(p): order[s:e] for p, s, e in zip(page_vals, starts, ends)
-    }
+    slices = _page_slices(table.page)
     empty = np.empty(0, dtype=np.int64)
     rows: List[dict] = []
     for p in sorted(set(slices) | set(media_by_page)):

@@ -212,3 +212,160 @@ def test_combine_hsep_stacks_matches_verbatim(boxes):
     want = _naive_combine_hseps(roles, m_x, m_y, m_w, m_h)
     norm = lambda runs: sorted((sorted(r), tuple(round(v, 3) for v in bb)) for r, bb in runs)
     assert norm(got) == norm(want)
+
+
+# ------------------------------------------------- W1-W3 word segmentation
+
+from pdfextract_spark.engine.vectorized import (  # noqa: E402
+    _page_glyphs, _segment_words_page, _style_luts,
+)
+from pdfextract_spark.layout import CharTable  # noqa: E402
+from pdfextract_spark.oracle.document import _glyphs_for_page  # noqa: E402
+from pdfextract_spark.oracle.style import Style  # noqa: E402
+from pdfextract_spark.oracle.words import segment_words  # noqa: E402
+
+_PAGE_STYLES = [
+    Style("Times", "", 10, 10),
+    Style("Times-Bold", "", 14, 14, bold=True),   # BIG_DIFFERENCE: W1 break
+    Style("Times", "", 11, 11),                   # SUBTLE: no break
+    Style("Times", "", 0, 0),                     # x_size 0: font size 10
+]
+
+# a line's flavour shapes its glyphs: the first six keep the page-wide W3
+# shortcut's preconditions (unless the union identity misses), "blank"
+# through "h_varies" each break one and reach the per-line exact fold
+_FLAVOURS = ["clean", "spaces", "multichar", "marks", "style_break", "single",
+             "blank", "zero_width", "backwards", "y_varies", "h_varies"]
+
+
+@st.composite
+def _glyph_pages(draw):
+    f = np.float32
+    cols = {k: [] for k in ("x", "y", "w", "h", "baseline", "style", "char")}
+    for _ in range(draw(st.integers(1, 5))):
+        flavour = draw(st.sampled_from(_FLAVOURS))
+        style = draw(st.integers(0, len(_PAGE_STYLES) - 1))
+        y = f(draw(st.floats(20, 700, width=32)))
+        # an h with low bits set makes f32(f32(y + h) - y) miss h
+        h = f(draw(st.one_of(st.sampled_from([8.0, 10.0, 12.5]),
+                             st.floats(5, 15, width=32))))
+        # a line starting near x = 0 makes f32(x_s + f32(ex_j - x_s)) miss
+        # ex_j, the union identity the page-wide shortcut relies on
+        x = f(draw(st.one_of(st.floats(0, 400, width=32), st.floats(0, 2, width=32))))
+        n = 1 if flavour == "single" else draw(st.integers(2, 16))
+        for j in range(n):
+            gx, gw, mark = x, f(draw(st.floats(3, 7, width=32))), False
+            gy, gh, gst, ch = y, h, style, draw(st.sampled_from("abcdxyz1+"))
+            odd = draw(st.booleans())
+            if odd and flavour == "spaces":
+                ch = " "
+            elif odd and flavour == "multichar":
+                ch = "e\u0301"  # base + mark in one glyph, as S7 merges them
+            elif odd and flavour == "blank":
+                ch = draw(st.sampled_from(["\t", "\xa0"]))
+            elif odd and flavour == "zero_width":
+                gw = f(0.0)
+            elif odd and flavour == "y_varies":
+                gy = f(y + f(0.5))
+            elif odd and flavour == "h_varies":
+                gh = f(h + f(1.0))
+            elif odd and flavour == "style_break":
+                gst = draw(st.integers(0, len(_PAGE_STYLES) - 1))
+            elif odd and flavour == "marks" and j:
+                # a combining mark: the box of the glyph before, no advance
+                gx, gw, mark = cols["x"][-1], cols["w"][-1], True
+            cols["x"].append(gx)
+            cols["y"].append(gy)
+            cols["w"].append(gw)
+            cols["h"].append(gh)
+            cols["baseline"].append(f(y + h))
+            cols["style"].append(gst)
+            cols["char"].append(ch)
+            # char gap or word gap; "backwards" lines also step left, past
+            # the glyph's own start (x falls) or only past its end (x rises,
+            # endX falls)
+            lo, hi = draw(st.sampled_from(
+                [(0.0, 0.5), (2.5, 4.5)] + ([(-12.0, -0.125)] if flavour == "backwards" else [])
+            ))
+            if not mark:
+                x = f(f(x + gw) + f(draw(st.floats(lo, hi, width=32))))
+    n = len(cols["char"])
+    return CharTable(
+        page=np.zeros(n, dtype=np.int32),
+        x=np.array(cols["x"], dtype=np.float32),
+        y=np.array(cols["y"], dtype=np.float32),
+        w=np.array(cols["w"], dtype=np.float32),
+        h=np.array(cols["h"], dtype=np.float32),
+        baseline=np.array(cols["baseline"], dtype=np.float32),
+        style_idx=np.array(cols["style"], dtype=np.int32),
+        char=cols["char"],
+        offset=np.arange(n, dtype=np.int32),
+        rot=np.zeros(n, dtype=np.int16),
+    )
+
+
+@settings(max_examples=300, deadline=None)
+@given(table=_glyph_pages(), mode=st.sampled_from(["tuned", "legacy"]))
+def test_page_wide_words_equal_oracle_segment_words(table, mode):
+    mask = np.ones(len(table), dtype=bool)
+    expected = segment_words(_glyphs_for_page(table, mask, _PAGE_STYLES), mode)
+    _, break_lut = _style_luts(_PAGE_STYLES)
+    xsize = np.array([s.x_size for s in _PAGE_STYLES], dtype=np.int64)
+    got = _segment_words_page(_page_glyphs(table, mask), break_lut, xsize, mode)
+
+    assert got.text == [g.text for g in expected]
+    for name in ("x", "y", "w", "h"):
+        want = np.array([getattr(g.pos, name) for g in expected], dtype=np.float32)
+        assert getattr(got, name).view(np.uint32).tolist() == want.view(np.uint32).tolist(), name
+    assert [_PAGE_STYLES[s] for s in got.style.tolist()] == [g.style for g in expected]
+    assert got.origin.tolist() == [g.origin for g in expected]
+
+
+# ---------------------------------------- layout: bulk per-word draws
+
+from pdfextract_spark.layout import _flow_metrics  # noqa: E402
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    # word lengths uniform up to 40: a width differs between the pairwise
+    # and a sequential kerning sum for ~1 % of words of 9+ chars
+    words=st.lists(
+        st.integers(1, 40).flatmap(lambda k: st.text(
+            alphabet="abx\u00e9\u0301\u0327", min_size=k, max_size=k)),
+        min_size=1, max_size=30),
+    data=st.data(),
+)
+def test_bulk_word_metrics_equal_per_word_draws(words, data):
+    """The tokenizer's bulk widths, advances and gaps equal what drawing
+    uniform(-0.05, 0.05, k - 1) and uniform(0.0, 0.08) per word gives,
+    including the pairwise order of the float32 kerning sum (k >= 8)."""
+    f = np.float32
+    sizes = [f(10), f(14), f(8)]
+    char_ws = [f(0.5 * s) for s in sizes]
+    styles = data.draw(st.lists(st.integers(0, 2), min_size=len(words),
+                                max_size=len(words)))
+    first, pos = [], 3
+    for wd in words:
+        first.append(pos)
+        pos += len(wd) + data.draw(st.integers(0, 4))
+    buf = np.random.default_rng(data.draw(st.integers(0, 2**32))).random(pos)
+    width, adv, gap, at = _flow_metrics(words, first, styles, buf, sizes, char_ws)
+
+    import unicodedata
+
+    for i, wd in enumerate(words):
+        size, cw, k = sizes[styles[i]], char_ws[styles[i]], len(wd)
+        jit = (-0.05 + 0.1 * buf[first[i]:first[i] + k - 1]).astype(np.float32) * size
+        assert f(len(wd) * cw + (jit.sum() if len(jit) else f(0.0))) == width[i]
+        assert f((0.28 + 0.08 * float(buf[first[i] + k - 1])) * float(size)) == gap[i]
+        walk = np.empty(k + 1, dtype=np.float32)
+        walk[0] = f(13.7)
+        walk[1:k] = cw + jit
+        walk[1:k][[unicodedata.combining(c) != 0 for c in wd[1:]]] = f(0.0)
+        walk[k] = cw
+        x, xs = f(13.7), []
+        for a in adv[at[i]:at[i + 1]]:
+            xs.append(x)
+            x = x + a
+        assert np.array(xs + [x], dtype=np.float32).tobytes() == np.cumsum(walk).tobytes()
