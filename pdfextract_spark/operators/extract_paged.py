@@ -7,14 +7,14 @@ known-hard #4). This operator splits the per-document pipeline at its two
 natural seams, both already factored in engine/vectorized.py:
 
   stage A (per doc, cheap):  tokenize + scan filters (S6-S10 are doc-local)
-                             -> ONE packed row per (doc_id, page): char
-                             geometry as float32 arrays, glyph text as a
-                             string array, media boxes as parallel arrays
+                             -> one row per (doc_id, page) whose payload is
+                             the page's glyph table and media boxes
   stage B (per PAGE):        word segmentation + full geometric analysis
-                             (_analyze_one_page) -> line/region/block/caption
-                             rows keyed doc_id   [the expensive 70-80%];
-                             a packed row IS a complete page group, so this
-                             is mapInPandas — no groupBy
+                             (_analyze_one_page) -> one row per page whose
+                             payload is its word table, lines, paragraphs,
+                             regions, blocks, captions and media
+                             [the expensive 70-80%]; a row IS a complete
+                             page group, so this is mapInPandas — no groupBy
   stage C (per doc, cheap):  rebuild the per-page structures and run the
                              UNCHANGED doc-level tail (_finalize_document:
                              L1-L6 + ordered assembly)
@@ -22,18 +22,31 @@ natural seams, both already factored in engine/vectorized.py:
 Pages are independent through stage B (proved in SURVEY.md §3 — the only
 doc-level couplings are the scan filters, kept in stage A, and the logical
 ops, kept in stage C), so one huge document fans out across the cluster and
-re-converges as a single small group of line rows. Shuffle volume is rows =
-pages (packed arrays), NOT rows = chars: the per-char-row formulation was
-measured 1.3x SLOWER than whole-doc routing on a 2000x-amplified soak
-because Arrow + two shuffles on 10^6 13-field rows per monster doc
-swamped the analysis win. Costs one round-robin repartition + one groupBy
-shuffle, so it is the OVERSIZED band's path — pipeline.run_extraction
-routes normal documents through the narrow operator.
+re-converges as a single small group of page rows. Costs one round-robin
+repartition + one groupBy shuffle, so it is the OVERSIZED band's path —
+pipeline.run_extraction routes normal documents through the narrow operator.
+
+Both shuffles carry `doc_id, page, payload` (PAGE_SCHEMA). The payload is an
+Arrow IPC stream of ONE one-row record batch: each column is a list holding
+one column of one of the page's tables, so tables of different lengths
+(glyphs and media boxes; words, lines, paragraphs, ...) share the batch.
+Shuffle rows are pages, not chars: the per-char-row formulation was measured
+1.3x SLOWER than whole-doc routing, because Arrow and two shuffles on 10^6
+13-field rows per monster doc swamped the analysis win. The payload is
+opaque to the JVM: when the pages crossed as 16 typed columns, 8 of them
+arrays (143k glyphs in 169 rows for a 5,000-span document), the JVM touched
+every element in the Arrow<->row conversion, the round-robin sort and both
+shuffles, and the document's single-task stage A and stage C took about
+twice their Python time. Stages B and C decode the payload column-wise
+(numpy views of the IPC buffers); stage B ships each page's word table flat
+in final line order, so stage C only slices it.
 
 Output is row-for-row identical to extract_spans (tests/test_extract_paged.py
-asserts equality): float32 geometry survives the shuffle because the word
-payload is serialized as float32 arrays and the derived fields (ex = x + w)
-are recomputed with the same float32 adds the narrow path uses.
+asserts equality): float32 geometry travels as raw IPC buffers, and the
+derived fields (ex = x + w) are recomputed with the same float32 adds the
+narrow path uses. A document that fails in stage A is quarantined as one
+page -1 row whose payload has the error text as its `error` column; stage B
+passes it through and stage C emits it as the doc's one error row.
 """
 
 from __future__ import annotations
@@ -42,7 +55,8 @@ from typing import Dict, Iterator, List, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame
 
 from ..config import CONFIG, EngineConfig
 from ..engine.vectorized import (
@@ -52,7 +66,7 @@ from ..engine.vectorized import (
     _Glyphs,
     _page_slices,
     _style_luts,
-    _WordTable,
+    _word_table,
 )
 from ..layout import MediaBox, doc_styles, layout_document
 from ..operators.extract import (
@@ -60,54 +74,74 @@ from ..operators.extract import (
 )
 from ..oracle.scanfilters import apply_scan_filters
 
-# ONE ROW PER (doc, page), char/media fields packed as arrays: shuffle rows
-# are pages, not chars (see the module docstring), and since a packed row IS
-# a complete page group, stage B is mapInPandas with NO groupBy.
-PAGE_CHAR_SCHEMA = (
-    "doc_id string, page int, x array<float>, y array<float>, w array<float>, "
-    "h array<float>, baseline array<float>, style_idx array<int>, "
-    "chars array<string>, off array<int>, "
-    "mx array<float>, my array<float>, mw array<float>, mh array<float>, "
-    "mref array<string>, moff array<int>"
-)
+# the schema of both shuffles: one row per (doc, page), the page opaque to
+# the JVM (see the module docstring); page -1 is a quarantined document
+PAGE_SCHEMA = "doc_id string, page int, payload binary"
 
-# every packed field null: the base of a quarantined document's page -1 row
-_NO_PAGE = dict.fromkeys(f.split()[0] for f in PAGE_CHAR_SCHEMA.split(", "))
+_NO_GLYPHS = np.empty(0, dtype=np.int64)
 
-PAGE_SCHEMA = (
-    "doc_id string, page int, rkind string, a int, b int, c int, "
-    "f0 float, f1 float, f2 float, f3 float, text string, origin long, "
-    "wx array<float>, wy array<float>, ww array<float>, wh array<float>, "
-    "wstyle array<int>, worigin array<long>, wtext array<string>"
-)
 
-_EMPTY = {
-    "f0": 0.0, "f1": 0.0, "f2": 0.0, "f3": 0.0, "text": "", "origin": 0,
-    "wx": None, "wy": None, "ww": None, "wh": None,
-    "wstyle": None, "worigin": None, "wtext": None,
-}
+def _pack_rows(cols: Dict[str, Tuple[object, np.ndarray]]) -> List[bytes]:
+    """Payloads of several pages at once: column -> (values, row offsets),
+    where values are a numpy array (its buffer is copied as is, so float32
+    bits survive) or a list of str. Builds one batch of list columns and
+    writes each row as its own IPC stream; the writer copies only the
+    values a row slice references. One batch per document instead of one
+    per page: Arrow's per-array construction cost dominated the encode."""
+    arrays = []
+    for v, offsets in cols.values():
+        values = pa.array(v, pa.string()) if isinstance(v, list) else pa.array(v)
+        arrays.append(pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values))
+    batch = pa.RecordBatch.from_arrays(arrays, names=list(cols))
+    payloads = []
+    for i in range(batch.num_rows):
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, batch.schema) as writer:
+            writer.write_batch(batch.slice(i, 1))
+        payloads.append(sink.getvalue().to_pybytes())
+    return payloads
+
+
+def _pack(cols: Dict[str, object]) -> bytes:
+    """One page's payload: column -> values, as for _pack_rows."""
+    return _pack_rows({k: (v, [0, len(v)]) for k, v in cols.items()})[0]
+
+
+def _unpack(payload: bytes) -> Dict[str, object]:
+    """Inverse of _pack: read-only numpy views of the numeric columns, lists
+    of str for the string ones."""
+    batch = pa.ipc.open_stream(payload).read_next_batch()
+    cols: Dict[str, object] = {}
+    for name, col in zip(batch.schema.names, batch.columns):
+        values = col.flatten()
+        cols[name] = (values.to_pylist() if pa.types.is_string(values.type)
+                      else values.to_numpy())
+    return cols
 
 
 def _stage_a(batches: Iterator[pd.DataFrame], cfg: EngineConfig) -> Iterator[pd.DataFrame]:
-    """Per doc: tokenize + doc-local scan filters -> packed per-page rows.
-    A failing doc is quarantined as one page -1 row with the error text in
-    `chars`; stages B and C pass it through as the doc's one error row."""
+    """Per doc: tokenize + doc-local scan filters -> one payload row per
+    page, one frame per document (see extract_spans_paged for the bound).
+    A failing doc is quarantined as one page -1 row; stages B and C pass it
+    through as the doc's one error row."""
     for pdf in batches:
-        rows: List[dict] = []
         for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
             try:
-                rows.extend(_pack_pages(doc_id, spans, cfg))
+                pages, payloads = _pack_pages(doc_id, spans, cfg)
             except Exception as exc:  # quarantine, never fail the task
-                rows.append(dict(_NO_PAGE, doc_id=doc_id, page=-1,
-                                 chars=[f"{type(exc).__name__}: {exc}"]))
-        if rows:
-            yield pd.DataFrame(rows)
+                pages = [-1]
+                payloads = [_pack({"error": [f"{type(exc).__name__}: {exc}"]})]
+            yield pd.DataFrame({
+                "doc_id": [doc_id] * len(pages),
+                "page": np.asarray(pages, dtype=np.int32),
+                "payload": payloads,
+            })
 
 
-def _pack_pages(doc_id: str, spans, cfg: EngineConfig) -> List[dict]:
-    """Char order within each page is the table order, as on the narrow
-    path (both split pages with _page_slices); media is packed sorted by
-    offset."""
+def _pack_pages(doc_id: str, spans, cfg: EngineConfig) -> Tuple[List[int], List[bytes]]:
+    """Char order within each page is the table order, and media keeps the
+    layout order, as on the narrow path (both split pages with
+    _page_slices)."""
     kinds, texts, refs, offs = _spans_to_lists(spans)
     order = np.argsort(np.asarray(offs, dtype=np.int64), kind="stable")
     kinds = [kinds[i] for i in order]
@@ -119,46 +153,49 @@ def _pack_pages(doc_id: str, spans, cfg: EngineConfig) -> List[dict]:
     media_by_page: Dict[int, list] = {}
     for m in media:
         media_by_page.setdefault(int(m.page), []).append(m)
-    chars = np.asarray(table.char, dtype=object)
     slices = _page_slices(table.page)
-    empty = np.empty(0, dtype=np.int64)
-    rows: List[dict] = []
-    for p in sorted(set(slices) | set(media_by_page)):
-        idx = slices.get(p, empty)
-        ms = sorted(media_by_page.get(p, []), key=lambda m: m.offset)
-        rows.append({
-            "doc_id": doc_id,
-            "page": int(p),
-            "x": table.x[idx], "y": table.y[idx],
-            "w": table.w[idx], "h": table.h[idx],
-            "baseline": table.baseline[idx],
-            "style_idx": table.style_idx[idx].astype(np.int32),
-            "chars": chars[idx].tolist(),
-            "off": table.offset[idx].astype(np.int32),
-            "mx": np.array([m.x for m in ms], dtype=np.float32),
-            "my": np.array([m.y for m in ms], dtype=np.float32),
-            "mw": np.array([m.w for m in ms], dtype=np.float32),
-            "mh": np.array([m.h for m in ms], dtype=np.float32),
-            "mref": [m.media_ref for m in ms],
-            "moff": np.array([m.offset for m in ms], dtype=np.int32),
-        })
-    return rows
+    pages = sorted(set(slices) | set(media_by_page))
+    if not pages:
+        return [], []
+    # the doc's glyphs and media boxes grouped by page, in `pages` order
+    per_page = [slices.get(p, _NO_GLYPHS) for p in pages]
+    idx = np.concatenate(per_page)
+    g_off = np.cumsum([0] + [len(i) for i in per_page])
+    ms = [m for p in pages for m in media_by_page.get(p, [])]
+    m_off = np.cumsum([0] + [len(media_by_page.get(p, [])) for p in pages])
+    chars = np.asarray(table.char, dtype=object)
+    glyphs = {
+        "x": table.x[idx], "y": table.y[idx],
+        "w": table.w[idx], "h": table.h[idx],
+        "baseline": table.baseline[idx],
+        "style": table.style_idx[idx],
+        "char": chars[idx].tolist(),
+        "off": table.offset[idx],
+    }
+    return pages, _pack_rows({
+        **{k: (v, g_off) for k, v in glyphs.items()},
+        **{k: (v, m_off) for k, v in _media_cols(ms).items()},
+    })
 
 
-def _word_row(doc_id, page, rkind, a, b, c, t: _WordTable, idxs: List[int], **kw):
-    row = dict(_EMPTY)
-    row.update(doc_id=doc_id, page=page, rkind=rkind, a=a, b=b, c=c)
-    row.update(
-        wx=t.x[idxs].astype(np.float32),
-        wy=t.y[idxs].astype(np.float32),
-        ww=t.w[idxs].astype(np.float32),
-        wh=t.h[idxs].astype(np.float32),
-        wstyle=t.style[idxs].astype(np.int32),
-        worigin=t.origin[idxs].astype(np.int64),
-        wtext=[t.text[i] for i in idxs],
-    )
-    row.update(kw)
-    return row
+def _media_cols(ms: List[MediaBox]) -> Dict[str, object]:
+    # float64 holds each box's Python float exactly
+    return {
+        "mx": np.array([m.x for m in ms], dtype=np.float64),
+        "my": np.array([m.y for m in ms], dtype=np.float64),
+        "mw": np.array([m.w for m in ms], dtype=np.float64),
+        "mh": np.array([m.h for m in ms], dtype=np.float64),
+        "mref": [m.media_ref for m in ms],
+        "moff": np.array([m.offset for m in ms], dtype=np.int64),
+    }
+
+
+def _media_boxes(page: int, c: Dict[str, object]) -> List[MediaBox]:
+    return [
+        MediaBox(page, *box)
+        for box in zip(c["mx"].tolist(), c["my"].tolist(), c["mw"].tolist(),
+                       c["mh"].tolist(), c["mref"], c["moff"].tolist())
+    ]
 
 
 def _doc_luts(doc_id: str, cache: dict):
@@ -176,140 +213,109 @@ def _doc_luts(doc_id: str, cache: dict):
     return hit
 
 
-def _analyze_packed_page(row, cfg: EngineConfig, mode: str, cache: dict) -> pd.DataFrame:
-    """One packed page row -> structure rows (geometric analysis)."""
-    doc_id, page = row["doc_id"], int(row["page"])
-    if page < 0:  # stage A quarantined the doc: pass its error on
-        return pd.DataFrame([dict(_EMPTY, doc_id=doc_id, page=page, rkind="error",
-                                  a=0, b=0, c=0, text=row["chars"][0])])
+def _analyze_page(doc_id: str, page: int, payload: bytes, cfg: EngineConfig,
+                  mode: str, cache: dict) -> bytes:
+    """One page's glyph payload -> its structure payload (geometric
+    analysis)."""
+    c = _unpack(payload)
     cmp_lut, break_lut, style_xsize, style_ysize = _doc_luts(doc_id, cache)
-
-    x = np.asarray(row["x"], dtype=np.float32)
-    y = np.asarray(row["y"], dtype=np.float32)
-    w = np.asarray(row["w"], dtype=np.float32)
-    h = np.asarray(row["h"], dtype=np.float32)
+    x, y, w, h = c["x"], c["y"], c["w"], c["h"]
     g = _Glyphs(
         x=x, y=y, w=w, h=h, ex=x + w, ey=y + h,
-        baseline=np.asarray(row["baseline"], dtype=np.float32),
-        style=np.asarray(row["style_idx"], dtype=np.int32),
-        text=list(row["chars"]),
-        origin=np.asarray(row["off"], dtype=np.int64),
+        baseline=c["baseline"], style=c["style"], text=c["char"],
+        origin=c["off"].astype(np.int64),
     )
-    page_media = [
-        MediaBox(page, float(mx), float(my), float(mw), float(mh), ref, int(off))
-        for mx, my, mw, mh, ref, off in zip(
-            row["mx"], row["my"], row["mw"], row["mh"], row["mref"], row["moff"]
-        )
-    ]
+    page_media = _media_boxes(page, c)
 
     t, paragraphs, bounds, blocks, captions = _analyze_one_page(
         g, page_media, cmp_lut, break_lut, style_xsize, style_ysize, cfg, mode
     )
 
-    rows: List[dict] = []
-    assigned: set = set()
-    for pi, para in enumerate(paragraphs):
-        for li, line in enumerate(para.lines):
-            rows.append(_word_row(
-                doc_id, page, "line", pi, li, para.region, t, line,
-                f0=float(para.block),
-            ))
-            assigned.update(line)
-    # words in the table but not in any line (assignment quirks) still count
-    # toward the doc-level style histograms — ship them as leftovers
-    left = [i for i in range(len(t)) if i not in assigned]
-    if left:
-        rows.append(_word_row(doc_id, page, "leftover", 0, 0, 0, t, left))
-    for ri, bnd in enumerate(bounds):
-        row = dict(_EMPTY)
-        row.update(doc_id=doc_id, page=page, rkind="region", a=ri, b=0, c=0,
-                   f0=float(bnd[0]), f1=float(bnd[1]), f2=float(bnd[2]),
-                   f3=float(bnd[3]))
-        rows.append(row)
-    for ri, bb in enumerate(blocks):
-        for rank, (y0, y1) in enumerate(bb):
-            row = dict(_EMPTY)
-            row.update(doc_id=doc_id, page=page, rkind="block", a=ri, b=rank,
-                       c=0, f0=float(y0), f1=float(y1))
-            rows.append(row)
-    for mi, caps in captions.items():
-        for li, (text, origin, style_idx, raw_words) in enumerate(caps):
-            # c carries the caption line's dominating-style index (may be
-            # FORMULA_IDX) so stage C can emit the same style_ref; the
-            # caption's per-word payload rides the (otherwise unused) word
-            # array columns so the VERBOSE sink gets identical word boxes
-            # from both paths (floats here; both paths round at emission)
-            row = dict(_EMPTY)
-            row.update(doc_id=doc_id, page=page, rkind="caption", a=int(mi),
-                       b=li, c=int(style_idx), text=text, origin=int(origin))
-            row.update(
-                wx=np.array([w[2] for w in raw_words], dtype=np.float32),
-                wy=np.array([w[3] for w in raw_words], dtype=np.float32),
-                ww=np.array([w[4] for w in raw_words], dtype=np.float32),
-                wh=np.array([w[5] for w in raw_words], dtype=np.float32),
-                wstyle=np.array([w[1] for w in raw_words], dtype=np.int32),
-                worigin=np.zeros(len(raw_words), dtype=np.int64),
-                wtext=[w[0] for w in raw_words],
-            )
-            rows.append(row)
-    for mi, m in enumerate(page_media):
-        row = dict(_EMPTY)
-        row.update(doc_id=doc_id, page=page, rkind="media", a=mi, b=0, c=0,
-                   f0=float(m.x), f1=float(m.y), f2=float(m.w), f3=float(m.h),
-                   text=m.media_ref, origin=int(m.offset))
-        rows.append(row)
-    if not rows:
-        return pd.DataFrame(columns=[f.split()[0] for f in PAGE_SCHEMA.split(", ")])
-    return pd.DataFrame(rows)
+    # the word table flat in final line order; words in no line (assignment
+    # quirks) follow as leftovers: they still count toward the doc-level
+    # style histograms
+    lines = [line for para in paragraphs for line in para.lines]
+    in_line = np.zeros(len(t), dtype=bool)
+    order = [i for line in lines for i in line]
+    in_line[order] = True
+    order = np.array(order + np.nonzero(~in_line)[0].tolist(), dtype=np.int64)
+    cap_lines = [(mi, cap) for mi, caps in captions.items() for cap in caps]
+    cap_words = [wd for _, cap in cap_lines for wd in cap[3]]
+    return _pack({
+        "wx": t.x[order], "wy": t.y[order], "ww": t.w[order], "wh": t.h[order],
+        "wstyle": t.style[order], "worigin": t.origin[order],
+        "wtext": [t.text[i] for i in order.tolist()],
+        "line_words": np.array([len(line) for line in lines], dtype=np.int32),
+        "para_lines": np.array([len(p.lines) for p in paragraphs], dtype=np.int32),
+        "para_region": np.array([p.region for p in paragraphs], dtype=np.int32),
+        "para_block": np.array([p.block for p in paragraphs], dtype=np.int32),
+        # region and block bounds are Python floats: float64 keeps them exact
+        "region": np.array(bounds, dtype=np.float64).reshape(-1),
+        "region_blocks": np.array([len(bb) for bb in blocks], dtype=np.int32),
+        "block": np.array([y for bb in blocks for yy in bb for y in yy],
+                          dtype=np.float64),
+        # caption lines (text, origin, dominating style, raw words) per media
+        # index; their words carry the float32 geometry by value
+        "cap_media": np.array([mi for mi, _ in cap_lines], dtype=np.int32),
+        "cap_text": [cap[0] for _, cap in cap_lines],
+        "cap_origin": np.array([cap[1] for _, cap in cap_lines], dtype=np.int64),
+        "cap_style": np.array([cap[2] for _, cap in cap_lines], dtype=np.int32),
+        "cap_words": np.array([len(cap[3]) for _, cap in cap_lines], dtype=np.int32),
+        "cw_text": [wd[0] for wd in cap_words],
+        "cw_style": np.array([wd[1] for wd in cap_words], dtype=np.int32),
+        "cw_box": np.array([wd[2:] for wd in cap_words], dtype=np.float32).reshape(-1),
+        **_media_cols(page_media),
+    })
 
 
 def _stage_b(batches: Iterator[pd.DataFrame], cfg: EngineConfig, mode: str) -> Iterator[pd.DataFrame]:
-    """mapInPandas over packed page rows — each row is a full page group.
-    Per-doc style LUTs cached across the partition; one output frame (one
-    Arrow batch) per input batch, not per page."""
+    """mapInPandas over page rows — each row is a full page group. Per-doc
+    style LUTs cached across the partition; one output frame (one Arrow
+    batch) per input batch, not per page. Quarantine rows (page -1) pass
+    through unchanged."""
     cache: dict = {}
     for pdf in batches:
-        outs = [
-            out
-            for row in pdf.to_dict("records")
-            if len(out := _analyze_packed_page(row, cfg, mode, cache))
-        ]
-        if outs:
-            yield pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+        yield pdf.assign(payload=[
+            payload if page < 0
+            else _analyze_page(doc_id, page, payload, cfg, mode, cache)
+            for doc_id, page, payload in zip(
+                pdf["doc_id"], pdf["page"].tolist(), pdf["payload"])
+        ])
 
 
-def _rebuild_table(word_rows: List[dict]) -> Tuple[_WordTable, List[List[int]]]:
-    """Concatenate per-line word arrays back into one page table; returns the
-    table and the per-row index lists (same construction as _word_table:
-    ex/ey via float32 adds)."""
-    xs, ys, ws, hs, sts, ors, txts = [], [], [], [], [], [], []
-    spans: List[List[int]] = []
-    base = 0
-    for r in word_rows:
-        n = len(r["wx"])
-        spans.append(list(range(base, base + n)))
-        base += n
-        xs.append(np.asarray(r["wx"], dtype=np.float32))
-        ys.append(np.asarray(r["wy"], dtype=np.float32))
-        ws.append(np.asarray(r["ww"], dtype=np.float32))
-        hs.append(np.asarray(r["wh"], dtype=np.float32))
-        sts.append(np.asarray(r["wstyle"], dtype=np.int32))
-        ors.append(np.asarray(r["worigin"], dtype=np.int64))
-        txts.extend(list(r["wtext"]))
-    if base == 0:
-        z = np.empty(0, dtype=np.float32)
-        return _WordTable(z, z, z, z, z, z, np.empty(0, np.int32), [],
-                          np.empty(0, np.int64), np.empty(0, np.int64)), spans
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    w = np.concatenate(ws)
-    h = np.concatenate(hs)
-    return _WordTable(
-        x=x, y=y, w=w, h=h, ex=x + w, ey=y + h,
-        style=np.concatenate(sts), text=txts,
-        tlen=np.array([len(s) for s in txts], dtype=np.int64),
-        origin=np.concatenate(ors),
-    ), spans
+def _splits(counts: np.ndarray) -> List[Tuple[int, int]]:
+    """Consecutive [start, end) ranges of the given lengths."""
+    ends = np.cumsum(counts, dtype=np.int64).tolist()
+    return list(zip([0] + ends[:-1], ends))
+
+
+def _page_structures(page: int, payload: bytes):
+    """One page's structure payload -> (word table, paragraphs, region
+    bounds, block bounds, captions, media) as _analyze_one_page and the
+    layout gave them."""
+    c = _unpack(payload)
+    t = _word_table(c["wx"], c["wy"], c["ww"], c["wh"], c["wstyle"],
+                    c["wtext"], c["worigin"])
+    lines = [list(range(a, b)) for a, b in _splits(c["line_words"])]
+    paras = [
+        Paragraph(lines[a:b], region=region, block=block)
+        for (a, b), region, block in zip(
+            _splits(c["para_lines"]), c["para_region"].tolist(),
+            c["para_block"].tolist())
+    ]
+    regions = [tuple(r) for r in c["region"].reshape(-1, 4).tolist()]
+    block = [tuple(yy) for yy in c["block"].reshape(-1, 2).tolist()]
+    blocks = [block[a:b] for a, b in _splits(c["region_blocks"])]
+    cw_text, cw_style = c["cw_text"], c["cw_style"].tolist()
+    cw_box = c["cw_box"].reshape(-1, 4).tolist()
+    captions: Dict[int, List[tuple]] = {}
+    for mi, text, origin, style, (a, b) in zip(
+        c["cap_media"].tolist(), c["cap_text"], c["cap_origin"].tolist(),
+        c["cap_style"].tolist(), _splits(c["cap_words"]),
+    ):
+        raw = tuple((cw_text[i], cw_style[i], *cw_box[i]) for i in range(a, b))
+        captions.setdefault(mi, []).append((text, origin, style, raw))
+    return t, paras, regions, blocks, captions, _media_boxes(page, c)
 
 
 def _stage_c(
@@ -317,81 +323,29 @@ def _stage_c(
 ) -> pd.DataFrame:
     """Per doc: rebuild per-page structures, run the doc-level tail."""
     doc_id = key[0]
-    errors = pdf.loc[pdf["rkind"] == "error", "text"]
-    if len(errors):
-        row = error_row(doc_id, errors.iloc[0])
+    by_page = dict(zip(pdf["page"].tolist(), pdf["payload"]))
+    if -1 in by_page:
+        row = error_row(doc_id, _unpack(by_page[-1])["error"][0])
         if with_words:
             row["words"] = []
         return pd.DataFrame([row])
     styles = doc_styles(doc_id)
-    pages_present = sorted(int(p) for p in pdf["page"].unique())
-    n_pages = (pages_present[-1] + 1) if pages_present else 0
+    n_pages = max(by_page) + 1
 
-    tables: List[_WordTable] = []
-    pages: List[List[Paragraph]] = []
-    page_regions: List[List] = []
-    page_blocks: List[List] = []
-    page_captions: List[Dict[int, List[Tuple[str, int]]]] = []
+    tables, pages, page_regions, page_blocks, page_captions = [], [], [], [], []
     media_by_page: Dict[int, List[MediaBox]] = {}
-
-    recs = pdf.to_dict("records")
-    by_page: Dict[int, List[dict]] = {}
-    for r in recs:
-        by_page.setdefault(int(r["page"]), []).append(r)
-
     for p in range(n_pages):
-        rows = by_page.get(p, [])
-        line_rows = sorted(
-            (r for r in rows if r["rkind"] == "line"),
-            key=lambda r: (int(r["a"]), int(r["b"])),
-        )
-        leftover = [r for r in rows if r["rkind"] == "leftover"]
-        t, spans = _rebuild_table(line_rows + leftover)
+        if p in by_page:
+            t, paras, regions, blocks, captions, media_by_page[p] = (
+                _page_structures(p, by_page[p]))
+        else:  # a page with neither glyphs nor media
+            t = _word_table([], [], [], [], [], [], [])
+            paras, regions, blocks, captions = [], [], [], {}
         tables.append(t)
-        paras: List[Paragraph] = []
-        for r, idxs in zip(line_rows, spans[: len(line_rows)]):
-            pi = int(r["a"])
-            if pi == len(paras):
-                paras.append(Paragraph([], region=int(r["c"]), block=int(r["f0"])))
-            paras[pi].lines.append(idxs)
         pages.append(paras)
-        page_regions.append([
-            (float(r["f0"]), float(r["f1"]), float(r["f2"]), float(r["f3"]))
-            for r in sorted(
-                (r for r in rows if r["rkind"] == "region"), key=lambda r: int(r["a"])
-            )
-        ])
-        blocks_rows = sorted(
-            (r for r in rows if r["rkind"] == "block"),
-            key=lambda r: (int(r["a"]), int(r["b"])),
-        )
-        bb: List[List[Tuple[float, float]]] = [[] for _ in page_regions[p]]
-        for r in blocks_rows:
-            bb[int(r["a"])].append((float(r["f0"]), float(r["f1"])))
-        page_blocks.append(bb)
-        caps: Dict[int, List[tuple]] = {}
-        for r in sorted(
-            (r for r in rows if r["rkind"] == "caption"),
-            key=lambda r: (int(r["a"]), int(r["b"])),
-        ):
-            raw_words = tuple(
-                (v, int(si), float(np.float32(x)), float(np.float32(y)),
-                 float(np.float32(w)), float(np.float32(h)))
-                for v, si, x, y, w, h in zip(
-                    r["wtext"], r["wstyle"], r["wx"], r["wy"], r["ww"], r["wh"]
-                )
-            )
-            caps.setdefault(int(r["a"]), []).append(
-                (r["text"], int(r["origin"]), int(r["c"]), raw_words)
-            )
-        page_captions.append(caps)
-        media_by_page[p] = [
-            MediaBox(p, float(r["f0"]), float(r["f1"]), float(r["f2"]),
-                     float(r["f3"]), r["text"], int(r["origin"]))
-            for r in sorted(
-                (r for r in rows if r["rkind"] == "media"), key=lambda r: int(r["a"])
-            )
-        ]
+        page_regions.append(regions)
+        page_blocks.append(blocks)
+        page_captions.append(captions)
 
     out = _finalize_document(
         tables, pages, page_regions, page_blocks, page_captions,
@@ -435,11 +389,16 @@ def extract_spans_paged(
     max-over-docs instead of sum-over-docs. (Stage A itself is the residual
     skew bound: tokenize + doc-local scan filters are O(doc) in one task by
     construction; span-range splitting of stage A is the next band if single
-    documents ever outgrow that.)"""
+    documents ever outgrow that.)
+
+    Size bound: stage A emits one Arrow batch per document, and Arrow
+    `binary` has int32 offsets, so one document's page payloads must total
+    under 2 GiB (stage C likewise receives one document's structure payloads
+    together)."""
     if doc_partitions > 0:
         documents_df = documents_df.repartition(doc_partitions)
     pages = documents_df.mapInPandas(
-        lambda it: _stage_a(it, cfg), schema=PAGE_CHAR_SCHEMA
+        lambda it: _stage_a(it, cfg), schema=PAGE_SCHEMA
     )
     if page_partitions > 0:
         # round-robin: page rows are near-uniform work units, so an even

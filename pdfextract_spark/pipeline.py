@@ -221,12 +221,15 @@ def run_extraction(
                               num_partitions=parallelism)
         if n_big:
             # no more stage-A tasks than oversized docs: an empty Python
-            # task still pays the worker's per-task setup
-            spans = spans.unionByName(
-                extract_spans_paged(bucket_docs.filter(oversized), cfg,
-                                    page_partitions=parallelism * 2,
-                                    doc_partitions=min(parallelism, n_big))
-            )
+            # task still pays the worker's per-task setup. The paged band
+            # comes first in the union, so the final stage schedules its
+            # stage-C tasks (the bucket's critical path) before the regular
+            # documents' tasks instead of queueing them behind those.
+            spans = extract_spans_paged(
+                bucket_docs.filter(oversized), cfg,
+                page_partitions=parallelism * 2,
+                doc_partitions=min(parallelism, n_big),
+            ).unionByName(spans)
         # observed in the write's result stage, so a retried map stage cannot
         # count a row twice. The write runs inside the extraction tasks
         # (`parallelism` for the small band, page_partitions for the paged
