@@ -28,6 +28,22 @@ Float32 parity notes (tests assert equality vs the oracle on every corpus):
 - int() casts replicate Java's truncation toward zero (positive coords)
 - sqrt: float32-rounded sqrt equals double-sqrt-then-round (2p+2 argument)
 
+The document pipeline is three steps, and every caller runs these:
+
+1. ``prepare_document``: offset sort, tokenize (layout_document), scan
+   filters, style tables, media by page, page slices, page count;
+2. ``PreparedDocument.analyze_page`` / ``_analyze_one_page``: one page's
+   geometric analysis, page-local by construction;
+3. ``finish_document``: the doc-level tail (``_finalize_document``); then
+   ``spans_frame`` turns spans (or a quarantined document's ``error_spans``)
+   into output rows.
+
+``extract_document_fast`` runs them in one loop (operators/extract.py's
+``extract_batch``, which streaming/extract_stream.py and the pipeline's
+narrow band run); operators/extract_paged.py runs them as stages A, B and C
+with shuffles in between; tools/render_page.py runs steps 1 and 2 for one
+page.
+
 Reference semantics per operator: see the docstrings in oracle/{words,lines,
 paragraphs,logical}.py and SURVEY.md §2 (file:line cites into /root/reference).
 """
@@ -39,6 +55,7 @@ from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
+import pandas as pd
 
 from ..config import CONFIG, EngineConfig
 from ..layout import CharTable, MediaBox, layout_document
@@ -106,6 +123,12 @@ class _Glyphs:
     def __len__(self) -> int:
         return len(self.text)
 
+    @classmethod
+    def of(cls, x, y, w, h, baseline, style, text: List[str], origin) -> "_Glyphs":
+        """The table from its stored columns; ex/ey are the float32 adds."""
+        return cls(x=x, y=y, w=w, h=h, ex=x + w, ey=y + h, baseline=baseline,
+                   style=style, text=text, origin=origin.astype(np.int64))
+
 
 def _page_slices(page: np.ndarray) -> Dict[int, np.ndarray]:
     """Each page's char indices, in table order. ONE stable argsort groups
@@ -124,17 +147,10 @@ def _page_glyphs(table: CharTable, mask: np.ndarray) -> _Glyphs:
 
 
 def _glyphs_at(table: CharTable, idx: np.ndarray) -> _Glyphs:
-    x = table.x[idx]
-    y = table.y[idx]
-    w = table.w[idx]
-    h = table.h[idx]
-    return _Glyphs(
-        x=x, y=y, w=w, h=h,
-        ex=x + w, ey=y + h,
-        baseline=table.baseline[idx],
-        style=table.style_idx[idx],
-        text=[table.char[i] for i in idx.tolist()],
-        origin=table.offset[idx].astype(np.int64),
+    return _Glyphs.of(
+        table.x[idx], table.y[idx], table.w[idx], table.h[idx],
+        table.baseline[idx], table.style_idx[idx],
+        [table.char[i] for i in idx.tolist()], table.offset[idx],
     )
 
 
@@ -148,6 +164,17 @@ def _style_luts(styles: List[Style]) -> Tuple[np.ndarray, np.ndarray]:
             cmp_lut[a, b] = style_compare(styles[a], styles[b])
     break_lut = (cmp_lut == BIG_DIFFERENCE) | (cmp_lut == SPLIT)
     return cmp_lut, break_lut
+
+
+def _style_tables(styles: List[Style]) -> Tuple[np.ndarray, ...]:
+    """The per-document style arguments of _analyze_one_page: (compare LUT,
+    word-break LUT, x sizes, y sizes)."""
+    cmp_lut, break_lut = _style_luts(styles)
+    return (
+        cmp_lut, break_lut,
+        np.array([s.x_size for s in styles], dtype=np.int64),
+        np.array([s.y_size for s in styles], dtype=np.int64),
+    )
 
 
 # ------------------------------------------------------------------- distance
@@ -1222,6 +1249,73 @@ def _analyze_one_page(
     return t, paragraphs, bounds, blocks, captions
 
 
+@dataclass
+class PreparedDocument:
+    """A document after the doc-local prologue: the tokenized, scan-filtered
+    glyph table, its media boxes and style tables, split by page."""
+
+    table: CharTable
+    media_by_page: Dict[int, List[MediaBox]]
+    styles: List[Style]
+    style_tables: Tuple[np.ndarray, ...]
+    slices: Dict[int, np.ndarray]  # page -> char indices, in table order
+    n_pages: int
+
+    def analyze_page(self, page: int, cfg: EngineConfig, mode: str):
+        """Step 2 on one page: _analyze_one_page's result."""
+        return _analyze_one_page(
+            _glyphs_at(self.table, self.slices.get(page, _NO_CHARS)),
+            self.media_by_page.get(page, []), *self.style_tables, cfg, mode,
+        )
+
+
+_NO_CHARS = np.empty(0, dtype=np.int64)
+
+
+def prepare_document(
+    doc_id: str,
+    kinds: Sequence[str],
+    texts: Sequence[str],
+    media_refs: Sequence[str],
+    offsets: Sequence[int],
+    cfg: EngineConfig = CONFIG,
+) -> PreparedDocument:
+    """Step 1: offset sort, tokenize, doc-local scan filters (S6-S10), style
+    tables, media by page (layout order) and page slices."""
+    order = np.argsort(np.asarray(offsets, dtype=np.int64), kind="stable")
+    table, media, styles = layout_document(
+        doc_id, [kinds[i] for i in order], [texts[i] for i in order],
+        [media_refs[i] for i in order], [int(offsets[i]) for i in order], cfg,
+    )
+    table = apply_scan_filters(table, styles, cfg)
+    media_by_page: Dict[int, List[MediaBox]] = {}
+    for m in media:
+        media_by_page.setdefault(m.page, []).append(m)
+    slices = _page_slices(table.page)
+    return PreparedDocument(
+        table, media_by_page, styles, _style_tables(styles), slices,
+        max([*slices, *media_by_page], default=-1) + 1,
+    )
+
+
+def finish_document(
+    per_page: List[tuple],
+    media_by_page: Dict[int, List[MediaBox]],
+    styles: List[Style],
+    cfg: EngineConfig,
+    emit_words: bool = False,
+) -> List[OutSpan]:
+    """Step 3: the doc-level tail over every page's _analyze_one_page result,
+    in page order."""
+    tables, pages, regions, blocks, captions = (
+        (list(c) for c in zip(*per_page)) if per_page else ([],) * 5
+    )
+    return _finalize_document(
+        tables, pages, regions, blocks, captions,
+        media_by_page, len(per_page), styles, cfg, emit_words=emit_words,
+    )
+
+
 def extract_document_fast(
     doc_id: str,
     kinds: Sequence[str],
@@ -1233,48 +1327,9 @@ def extract_document_fast(
     emit_words: bool = False,
 ) -> List[OutSpan]:
     """Drop-in vectorized equivalent of oracle.document.extract_document."""
-    order = np.argsort(np.asarray(offsets, dtype=np.int64), kind="stable")
-    kinds = [kinds[i] for i in order]
-    texts = [texts[i] for i in order]
-    media_refs = [media_refs[i] for i in order]
-    offsets = [int(offsets[i]) for i in order]
-
-    table, media, styles = layout_document(doc_id, kinds, texts, media_refs, offsets, cfg)
-    table = apply_scan_filters(table, styles, cfg)
-    cmp_lut, break_lut = _style_luts(styles)
-    style_xsize = np.array([s.x_size for s in styles], dtype=np.int64)
-    style_ysize = np.array([s.y_size for s in styles], dtype=np.int64)
-
-    n_pages = int(table.page.max()) + 1 if len(table) else 0
-    n_pages = max(n_pages, (max((m.page for m in media), default=-1) + 1))
-
-    media_by_page: Dict[int, List[MediaBox]] = {}
-    for m in media:
-        media_by_page.setdefault(m.page, []).append(m)
-
-    tables: List[_WordTable] = []
-    pages: List[List[Paragraph]] = []
-    page_regions: List[List] = []
-    page_blocks: List[List] = []
-    page_captions: List[Dict[int, List[Tuple[str, int]]]] = []
-    slices = _page_slices(table.page)
-    no_chars = np.empty(0, dtype=np.int64)
-    for p in range(n_pages):
-        g = _glyphs_at(table, slices.get(p, no_chars))
-        t, paragraphs, bounds, blocks, captions = _analyze_one_page(
-            g, media_by_page.get(p, []), cmp_lut, break_lut,
-            style_xsize, style_ysize, cfg, mode,
-        )
-        tables.append(t)
-        pages.append(paragraphs)
-        page_regions.append(bounds)
-        page_blocks.append(blocks)
-        page_captions.append(captions)
-
-    return _finalize_document(
-        tables, pages, page_regions, page_blocks, page_captions,
-        media_by_page, n_pages, styles, cfg, emit_words=emit_words,
-    )
+    doc = prepare_document(doc_id, kinds, texts, media_refs, offsets, cfg)
+    per_page = [doc.analyze_page(p, cfg, mode) for p in range(doc.n_pages)]
+    return finish_document(per_page, doc.media_by_page, doc.styles, cfg, emit_words)
 
 
 def _finalize_document(
@@ -1291,7 +1346,7 @@ def _finalize_document(
 ) -> List[OutSpan]:
     """Doc-level tail: logical analysis (L1-L6) + ordered span assembly.
     Pure function of the per-page analysis results — the page-parallel path
-    reconstructs its inputs from shuffled rows and calls this unchanged."""
+    reconstructs its inputs from shuffled rows; both reach it via finish_document."""
     body = _find_body_style(tables, styles)
     header_candidates = _find_header_candidates(tables, pages, body, styles)
     title = _extract_title(tables, pages, header_candidates)
@@ -1383,3 +1438,45 @@ def _finalize_document(
                                    page=p, para=pi))
                 seq += 1
     return out
+
+
+# ---------------------------------------------------------------- output rows
+
+# the output frame's span columns after doc_id, with their pandas dtypes
+# (operators/extract.py OUTPUT_SCHEMA)
+_SPAN_DTYPES = {
+    "seq": "int32", "kind": "object", "text": "object", "media_ref": "object",
+    "offset": "int32", "page": "int32", "para": "int32", "style_ref": "object",
+}
+
+
+def error_text(exc: Exception) -> str:
+    return f"{type(exc).__name__}: {exc}"
+
+
+def error_spans(text: str) -> List[OutSpan]:
+    """The one output span of a quarantined document."""
+    return [OutSpan(-1, "error", text, "", -1)]
+
+
+def words_as_rows(words: tuple) -> list:
+    """OutSpan.words tuple -> Arrow-friendly list of struct dicts."""
+    return [
+        {"value": v, "style_ref": r, "x": x, "y": y, "w": w, "h": h}
+        for (v, r, x, y, w, h) in words
+    ]
+
+
+def spans_frame(
+    docs: Sequence[Tuple[str, List[OutSpan]]], with_words: bool = False
+) -> pd.DataFrame:
+    """(doc_id, spans) per document -> the output frame, plus the VERBOSE
+    `words` column when with_words."""
+    ids = [doc_id for doc_id, out in docs for _ in out]
+    spans = [s for _, out in docs for s in out]
+    data = {"doc_id": pd.Series(ids, dtype="object")}
+    for col, dtype in _SPAN_DTYPES.items():
+        data[col] = pd.Series([getattr(s, col) for s in spans], dtype=dtype)
+    if with_words:
+        data["words"] = pd.Series([words_as_rows(s.words) for s in spans], dtype="object")
+    return pd.DataFrame(data)

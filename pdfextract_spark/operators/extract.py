@@ -21,13 +21,17 @@ Scale design:
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import Iterator
 
-import numpy as np
 import pandas as pd
 
 from ..config import CONFIG, EngineConfig
-from ..engine import extract_document_fast as extract_document
+from ..engine.vectorized import (
+    error_spans,
+    error_text,
+    extract_document_fast as extract_document,
+    spans_frame,
+)
 
 OUTPUT_SCHEMA = (
     "doc_id string, seq int, kind string, text string, media_ref string, offset int, "
@@ -42,11 +46,6 @@ WORDS_FIELD = (
     "words array<struct<value:string,style_ref:string,x:int,y:int,w:int,h:int>>"
 )
 OUTPUT_SCHEMA_WORDS = f"{OUTPUT_SCHEMA}, {WORDS_FIELD}"
-
-_OUT_COLS = [
-    "doc_id", "seq", "kind", "text", "media_ref", "offset",
-    "page", "para", "style_ref",
-]
 
 # the flat span-equality surface (driver contract; structural columns are a
 # round-3 superset carried for the nested sinks)
@@ -63,66 +62,21 @@ def _spans_to_lists(spans) -> tuple:
     return kinds, texts, refs, offs
 
 
-def error_row(doc_id: str, text: str) -> dict:
-    """The one output row of a quarantined document (both operators)."""
-    return {"doc_id": doc_id, "seq": -1, "kind": "error", "text": text,
-            "media_ref": "", "offset": -1, "page": -1, "para": -1,
-            "style_ref": ""}
-
-
-def words_as_rows(words: tuple) -> list:
-    """OutSpan.words tuple -> Arrow-friendly list of struct dicts."""
-    return [
-        {"value": v, "style_ref": r, "x": x, "y": y, "w": w, "h": h}
-        for (v, r, x, y, w, h) in words
-    ]
-
-
 def extract_batch(
     pdf: pd.DataFrame, cfg: EngineConfig = CONFIG, with_words: bool = False
 ) -> pd.DataFrame:
     """Extract every document in one Arrow batch (driver for the per-doc
     pipeline; used by both the Spark operator and local tooling)."""
-    out = {c: [] for c in _OUT_COLS}
-    words_col: List[list] = []
+    results = []
     for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
         try:
-            kinds, texts, refs, offs = _spans_to_lists(spans)
-            result = extract_document(
-                doc_id, kinds, texts, refs, offs, cfg, emit_words=with_words
+            out = extract_document(
+                doc_id, *_spans_to_lists(spans), cfg, emit_words=with_words
             )
         except Exception as exc:  # quarantine, never fail the task
-            row = error_row(doc_id, f"{type(exc).__name__}: {exc}")
-            for c in _OUT_COLS:
-                out[c].append(row[c])
-            words_col.append([])
-            continue
-        for sp in result:
-            out["doc_id"].append(doc_id)
-            out["seq"].append(sp.seq)
-            out["kind"].append(sp.kind)
-            out["text"].append(sp.text)
-            out["media_ref"].append(sp.media_ref)
-            out["offset"].append(sp.offset)
-            out["page"].append(sp.page)
-            out["para"].append(sp.para)
-            out["style_ref"].append(sp.style_ref)
-            if with_words:
-                words_col.append(words_as_rows(sp.words))
-    data = {
-        "doc_id": pd.Series(out["doc_id"], dtype="object"),
-        "seq": pd.Series(out["seq"], dtype="int32"),
-        "kind": pd.Series(out["kind"], dtype="object"),
-        "text": pd.Series(out["text"], dtype="object"),
-        "media_ref": pd.Series(out["media_ref"], dtype="object"),
-        "offset": pd.Series(out["offset"], dtype="int32"),
-        "page": pd.Series(out["page"], dtype="int32"),
-        "para": pd.Series(out["para"], dtype="int32"),
-        "style_ref": pd.Series(out["style_ref"], dtype="object"),
-    }
-    if with_words:
-        data["words"] = pd.Series(words_col, dtype="object")
-    return pd.DataFrame(data)
+            out = error_spans(error_text(exc))
+        results.append((doc_id, out))
+    return spans_frame(results, with_words)
 
 
 def extract_spans(

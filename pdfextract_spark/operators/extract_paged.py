@@ -3,27 +3,28 @@
 The narrow path (operators/extract.py) processes one document per task; a
 10k-page document therefore stalls its task no matter how the corpus is
 partitioned — the last skew band size-banding alone cannot fix (SURVEY.md §7
-known-hard #4). This operator splits the per-document pipeline at its two
-natural seams, both already factored in engine/vectorized.py:
+known-hard #4). This operator runs the engine's three steps
+(engine/vectorized.py) as three stages, with the pages shuffled in between:
 
-  stage A (per doc, cheap):  tokenize + scan filters (S6-S10 are doc-local)
-                             -> one row per (doc_id, page) whose payload is
-                             the page's glyph table and media boxes
-  stage B (per PAGE):        word segmentation + full geometric analysis
-                             (_analyze_one_page) -> one row per page whose
+  stage A (per doc, cheap):  prepare_document (tokenize + scan filters;
+                             S6-S10 are doc-local) -> one row per
+                             (doc_id, page) whose payload is the page's
+                             glyph table and media boxes
+  stage B (per PAGE):        _analyze_one_page (word segmentation + full
+                             geometric analysis) -> one row per page whose
                              payload is its word table, lines, paragraphs,
                              regions, blocks, captions and media
                              [the expensive 70-80%]; a row IS a complete
                              page group, so this is mapInPandas — no groupBy
-  stage C (per doc, cheap):  rebuild the per-page structures and run the
-                             UNCHANGED doc-level tail (_finalize_document:
-                             L1-L6 + ordered assembly)
+  stage C (per doc, cheap):  rebuild the per-page structures and run
+                             finish_document (L1-L6 + ordered assembly)
 
 Pages are independent through stage B (proved in SURVEY.md §3 — the only
 doc-level couplings are the scan filters, kept in stage A, and the logical
 ops, kept in stage C), so one huge document fans out across the cluster and
-re-converges as a single small group of page rows. Costs one round-robin
-repartition + one groupBy shuffle, so it is the OVERSIZED band's path —
+re-converges as a single small group of page rows. It plans up to three
+exchanges (the input documents' round-robin fan-out, the pages' round-robin
+and the `doc_id` hash for stage C), so it is the OVERSIZED band's path —
 pipeline.run_extraction routes normal documents through the narrow operator.
 
 Both shuffles carry `doc_id, page, payload` (PAGE_SCHEMA). The payload is an
@@ -60,25 +61,24 @@ from pyspark.sql import DataFrame
 
 from ..config import CONFIG, EngineConfig
 from ..engine.vectorized import (
+    _NO_CHARS,
     Paragraph,
     _analyze_one_page,
-    _finalize_document,
     _Glyphs,
-    _page_slices,
-    _style_luts,
+    _style_tables,
     _word_table,
+    error_spans,
+    error_text,
+    finish_document,
+    prepare_document,
+    spans_frame,
 )
-from ..layout import MediaBox, doc_styles, layout_document
-from ..operators.extract import (
-    OUTPUT_SCHEMA, OUTPUT_SCHEMA_WORDS, _spans_to_lists, error_row,
-)
-from ..oracle.scanfilters import apply_scan_filters
+from ..layout import MediaBox, doc_styles
+from ..operators.extract import OUTPUT_SCHEMA, OUTPUT_SCHEMA_WORDS, _spans_to_lists
 
 # the schema of both shuffles: one row per (doc, page), the page opaque to
 # the JVM (see the module docstring); page -1 is a quarantined document
 PAGE_SCHEMA = "doc_id string, page int, payload binary"
-
-_NO_GLYPHS = np.empty(0, dtype=np.int64)
 
 
 def _pack_rows(cols: Dict[str, Tuple[object, np.ndarray]]) -> List[bytes]:
@@ -130,7 +130,7 @@ def _stage_a(batches: Iterator[pd.DataFrame], cfg: EngineConfig) -> Iterator[pd.
                 pages, payloads = _pack_pages(doc_id, spans, cfg)
             except Exception as exc:  # quarantine, never fail the task
                 pages = [-1]
-                payloads = [_pack({"error": [f"{type(exc).__name__}: {exc}"]})]
+                payloads = [_pack({"error": [error_text(exc)]})]
             yield pd.DataFrame({
                 "doc_id": [doc_id] * len(pages),
                 "page": np.asarray(pages, dtype=np.int32),
@@ -139,26 +139,16 @@ def _stage_a(batches: Iterator[pd.DataFrame], cfg: EngineConfig) -> Iterator[pd.
 
 
 def _pack_pages(doc_id: str, spans, cfg: EngineConfig) -> Tuple[List[int], List[bytes]]:
-    """Char order within each page is the table order, and media keeps the
-    layout order, as on the narrow path (both split pages with
-    _page_slices)."""
-    kinds, texts, refs, offs = _spans_to_lists(spans)
-    order = np.argsort(np.asarray(offs, dtype=np.int64), kind="stable")
-    kinds = [kinds[i] for i in order]
-    texts = [texts[i] for i in order]
-    refs = [refs[i] for i in order]
-    offs = [int(offs[i]) for i in order]
-    table, media, styles = layout_document(doc_id, kinds, texts, refs, offs, cfg)
-    table = apply_scan_filters(table, styles, cfg)
-    media_by_page: Dict[int, list] = {}
-    for m in media:
-        media_by_page.setdefault(int(m.page), []).append(m)
-    slices = _page_slices(table.page)
+    """The prepared document's pages with glyphs or media, in table order
+    within a page and layout order for media, as the engine's page loop
+    sees them."""
+    doc = prepare_document(doc_id, *_spans_to_lists(spans), cfg)
+    table, slices, media_by_page = doc.table, doc.slices, doc.media_by_page
     pages = sorted(set(slices) | set(media_by_page))
     if not pages:
         return [], []
     # the doc's glyphs and media boxes grouped by page, in `pages` order
-    per_page = [slices.get(p, _NO_GLYPHS) for p in pages]
+    per_page = [slices.get(p, _NO_CHARS) for p in pages]
     idx = np.concatenate(per_page)
     g_off = np.cumsum([0] + [len(i) for i in per_page])
     ms = [m for p in pages for m in media_by_page.get(p, [])]
@@ -198,37 +188,22 @@ def _media_boxes(page: int, c: Dict[str, object]) -> List[MediaBox]:
     ]
 
 
-def _doc_luts(doc_id: str, cache: dict):
-    """Per-doc style tables, cached per worker batch: a doc's pages are
-    spread round-robin, so without the cache every PAGE rebuilds the style
-    LUTs (measured ~40% of the operator's small-doc overhead when benched
-    corpus-wide). Bounded by distinct docs per partition."""
-    hit = cache.get(doc_id)
-    if hit is None:
-        styles = doc_styles(doc_id)
-        cmp_lut, break_lut = _style_luts(styles)
-        sx = np.array([s.x_size for s in styles], dtype=np.int64)
-        sy = np.array([s.y_size for s in styles], dtype=np.int64)
-        hit = cache[doc_id] = (cmp_lut, break_lut, sx, sy)
-    return hit
-
-
 def _analyze_page(doc_id: str, page: int, payload: bytes, cfg: EngineConfig,
                   mode: str, cache: dict) -> bytes:
     """One page's glyph payload -> its structure payload (geometric
-    analysis)."""
+    analysis). `cache` holds each document's style tables for the batch: a
+    doc's pages are spread round-robin, and rebuilding the tables per PAGE
+    was measured ~40% of the operator's small-doc overhead corpus-wide."""
     c = _unpack(payload)
-    cmp_lut, break_lut, style_xsize, style_ysize = _doc_luts(doc_id, cache)
-    x, y, w, h = c["x"], c["y"], c["w"], c["h"]
-    g = _Glyphs(
-        x=x, y=y, w=w, h=h, ex=x + w, ey=y + h,
-        baseline=c["baseline"], style=c["style"], text=c["char"],
-        origin=c["off"].astype(np.int64),
-    )
+    tables = cache.get(doc_id)
+    if tables is None:
+        tables = cache[doc_id] = _style_tables(doc_styles(doc_id))
+    g = _Glyphs.of(c["x"], c["y"], c["w"], c["h"], c["baseline"], c["style"],
+                   c["char"], c["off"])
     page_media = _media_boxes(page, c)
 
     t, paragraphs, bounds, blocks, captions = _analyze_one_page(
-        g, page_media, cmp_lut, break_lut, style_xsize, style_ysize, cfg, mode
+        g, page_media, *tables, cfg, mode
     )
 
     # the word table flat in final line order; words in no line (assignment
@@ -325,50 +300,18 @@ def _stage_c(
     doc_id = key[0]
     by_page = dict(zip(pdf["page"].tolist(), pdf["payload"]))
     if -1 in by_page:
-        row = error_row(doc_id, _unpack(by_page[-1])["error"][0])
-        if with_words:
-            row["words"] = []
-        return pd.DataFrame([row])
-    styles = doc_styles(doc_id)
-    n_pages = max(by_page) + 1
-
-    tables, pages, page_regions, page_blocks, page_captions = [], [], [], [], []
-    media_by_page: Dict[int, List[MediaBox]] = {}
-    for p in range(n_pages):
-        if p in by_page:
-            t, paras, regions, blocks, captions, media_by_page[p] = (
-                _page_structures(p, by_page[p]))
-        else:  # a page with neither glyphs nor media
-            t = _word_table([], [], [], [], [], [], [])
-            paras, regions, blocks, captions = [], [], [], {}
-        tables.append(t)
-        pages.append(paras)
-        page_regions.append(regions)
-        page_blocks.append(blocks)
-        page_captions.append(captions)
-
-    out = _finalize_document(
-        tables, pages, page_regions, page_blocks, page_captions,
-        media_by_page, n_pages, styles, cfg, emit_words=with_words,
-    )
-    data = {
-        "doc_id": pd.Series([doc_id] * len(out), dtype="object"),
-        "seq": pd.Series([s.seq for s in out], dtype="int32"),
-        "kind": pd.Series([s.kind for s in out], dtype="object"),
-        "text": pd.Series([s.text for s in out], dtype="object"),
-        "media_ref": pd.Series([s.media_ref for s in out], dtype="object"),
-        "offset": pd.Series([s.offset for s in out], dtype="int32"),
-        "page": pd.Series([s.page for s in out], dtype="int32"),
-        "para": pd.Series([s.para for s in out], dtype="int32"),
-        "style_ref": pd.Series([s.style_ref for s in out], dtype="object"),
-    }
-    if with_words:
-        from ..operators.extract import words_as_rows
-
-        data["words"] = pd.Series(
-            [words_as_rows(s.words) for s in out], dtype="object"
-        )
-    return pd.DataFrame(data)
+        out = error_spans(_unpack(by_page[-1])["error"][0])
+    else:
+        per_page, media_by_page = [], {}
+        for p in range(max(by_page) + 1):
+            if p in by_page:
+                *page, media_by_page[p] = _page_structures(p, by_page[p])
+            else:  # a page with neither glyphs nor media
+                page = (_word_table([], [], [], [], [], [], []), [], [], [], {})
+            per_page.append(page)
+        out = finish_document(per_page, media_by_page, doc_styles(doc_id), cfg,
+                              with_words)
+    return spans_frame([(doc_id, out)], with_words)
 
 
 def extract_spans_paged(

@@ -43,6 +43,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import IntegralType
 
 from .config import CONFIG, EngineConfig
 from .operators.extract import extract_spans
@@ -76,18 +77,21 @@ def with_bucket(documents: DataFrame, n_buckets: int) -> DataFrame:
     the whole corpus once per bucket — the difference between O(corpus) and
     O(corpus x n_buckets) total scan work in run_extraction.
 
-    A pre-existing column is VALIDATED before being trusted: if it was
-    produced with a larger modulus than n_buckets, documents with
-    doc_bucket >= n_buckets would silently never be extracted
-    (run_extraction only iterates range(n_buckets)) — so an out-of-range
-    assignment is recomputed. The check is one cheap min/max aggregate over a
-    partition column (metadata-sized on a partitioned staging table)."""
+    A pre-existing column is VALIDATED before being trusted: a document whose
+    doc_bucket is null, not an integer, or outside range(n_buckets) matches
+    no `doc_bucket == b` in run_extraction and would silently never be
+    extracted — so such an assignment is recomputed. The check is one cheap
+    min/max/null-count aggregate over a partition column (metadata-sized on
+    a partitioned staging table); a non-integral column is recomputed
+    without it."""
     if "doc_bucket" in documents.columns:
-        lo, hi = documents.agg(
-            F.min("doc_bucket"), F.max("doc_bucket")
-        ).first()
-        if hi is not None and 0 <= int(lo) and int(hi) < n_buckets:
-            return documents
+        if isinstance(documents.schema["doc_bucket"].dataType, IntegralType):
+            lo, hi, nulls = documents.agg(
+                F.min("doc_bucket"), F.max("doc_bucket"),
+                F.count(F.when(F.col("doc_bucket").isNull(), 1)),
+            ).first()
+            if hi is not None and not nulls and 0 <= lo and hi < n_buckets:
+                return documents
         documents = documents.drop("doc_bucket")
     return documents.withColumn(
         "doc_bucket", F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets))
@@ -213,7 +217,10 @@ def run_extraction(
         t0 = time.perf_counter()
         spark.sparkContext.setJobDescription(f"extract bucket={b}")
         bucket_docs = docs.filter(F.col("doc_bucket") == b).drop("doc_bucket")
-        oversized = F.size("spans") > cfg.oversize_span_threshold
+        # size(null) is null under ANSI: a null `spans` must fall in exactly
+        # one band (the narrow one, which quarantines it)
+        oversized = (F.coalesce(F.size("spans"), F.lit(0))
+                     > cfg.oversize_span_threshold)
         n_docs, n_big = bucket_docs.agg(
             F.count(F.lit(1)), F.count(F.when(oversized, 1))
         ).first()

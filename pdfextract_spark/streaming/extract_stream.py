@@ -6,7 +6,7 @@ INGESTION wrapper a production deployment runs when documents arrive as
 files/table commits rather than as a fixed snapshot:
 
     readStream (file source over the interleaved table)
-      -> the SAME stateless mapInPandas extraction (extract_batch)
+      -> the SAME stateless mapInPandas extraction (extract_spans)
       -> writeStream to partitioned parquet with a checkpointLocation
 
 Because extraction is stateless per document, the streaming plan is the
@@ -19,9 +19,8 @@ checkpoint — the streaming analog of pipeline.py's bucket manifest.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
@@ -32,7 +31,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import CONFIG, EngineConfig
-from ..operators.extract import OUTPUT_SCHEMA, extract_batch
+from ..operators.extract import extract_spans
 
 INTERLEAVED_SCHEMA = StructType(
     [
@@ -68,14 +67,9 @@ def extract_stream(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs = reader.load(input_dir)
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield extract_batch(pdf, cfg)
-
-    return docs.mapInPandas(process, schema=OUTPUT_SCHEMA)
+    # -1: keep the source's partitioning (a stream has no scan splits to
+    # estimate)
+    return extract_spans(reader.load(input_dir), cfg, num_partitions=-1)
 
 
 def start_extract_stream(

@@ -198,3 +198,32 @@ def test_uri_output_path_commits_through_its_file_system(spark, docs_sdf, tmp_pa
 
     r2 = run_extraction(spark, docs_sdf, out, n_buckets=2, parallelism=4)
     assert r2.buckets_done == [] and sorted(r2.buckets_skipped) == [0, 1]
+
+
+def test_null_spans_doc_is_quarantined(spark, tmp_path):
+    # size(null) is null under ANSI, so the band split must not drop the doc
+    docs = spark.createDataFrame(
+        [("good", _text_spans(3)), ("null_spans", None)], DOCS_SCHEMA
+    )
+    out = str(tmp_path / "extract_null_spans")
+    r = run_extraction(spark, docs, out, n_buckets=1, parallelism=2)
+    assert r.total_docs == 2 and r.total_errors == 1
+    q = spark.read.parquet(os.path.join(out, "quarantine")).collect()
+    assert [(row.doc_id, row.kind, row.seq) for row in q] == [("null_spans", "error", -1)]
+    assert [row.n_errors for row in pipeline.read_manifest(spark, out).collect()] == [1]
+
+
+@pytest.mark.parametrize("bucket_type, buckets", [
+    ("int", [0, None, None]),        # min/max skip the nulls
+    ("double", [0.5, 1.5, 1.0]),     # int(lo), int(hi) in range; == b misses
+])
+def test_untrusted_doc_bucket_is_recomputed(spark, tmp_path, bucket_type, buckets):
+    docs = spark.createDataFrame(
+        [(d, _text_spans(3), b) for d, b in zip("abc", buckets)],
+        f"{DOCS_SCHEMA}, doc_bucket {bucket_type}",
+    )
+    out = str(tmp_path / f"extract_bucket_{bucket_type}")
+    r = run_extraction(spark, docs, out, n_buckets=2, parallelism=2)
+    assert r.total_docs == 3
+    spans = spark.read.parquet(os.path.join(out, "spans"))
+    assert {row.doc_id for row in spans.select("doc_id").distinct().collect()} == set("abc")

@@ -189,3 +189,26 @@ def test_no_rdd_materialization():
                 bad.append(path)
                 break
     assert not bad, f"df.rdd usage in package code: {bad}"
+
+
+def test_document_pipeline_steps_called_only_in_engine():
+    # the per-document prologue and tail run through the engine's
+    # prepare_document / finish_document; a caller that spells them out
+    # again is a copy that every engine change must edit in step
+    tools = os.path.join(os.path.dirname(PKG), "tools")
+    pat = re.compile(r"(?<!def )\b(layout_document|apply_scan_filters|_finalize_document)\(")
+    bad = []
+    for root in (PKG, tools):
+        for dirpath, _dirs, files in os.walk(root):
+            rel = os.path.relpath(dirpath, PKG)
+            if rel.split(os.sep)[0] in ("engine", "oracle"):
+                continue
+            for f in files:
+                if not f.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, f)
+                for line in open(path):
+                    if pat.search(line.split("#", 1)[0]):
+                        bad.append(path)
+                        break
+    assert not bad, f"document pipeline steps called outside engine/: {bad}"

@@ -32,52 +32,23 @@ FIXTURE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__fil
 
 
 def expected_for_sf(spark, sf_dir: str) -> pd.DataFrame:
-    from pdfextract_spark.operators.extract import words_as_rows
+    from pdfextract_spark.engine.vectorized import spans_frame
     from pdfextract_spark.oracle.document import extract_document
     from pdfextract_spark.sources.adapters import documents_to_interleaved
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     inter = documents_to_interleaved(docs).toPandas()
-
-    cols = [
-        "doc_id", "seq", "kind", "text", "media_ref", "offset",
-        "page", "para", "style_ref", "words",
-    ]
-    out = {c: [] for c in cols}
-    for doc_id, spans in zip(inter["doc_id"], inter["spans"]):
-        result = extract_document(
+    return spans_frame([
+        (doc_id, extract_document(
             doc_id,
             [s["kind"] for s in spans],
             [s["text"] for s in spans],
             [s["media_ref"] for s in spans],
             [int(s["offset"]) for s in spans],
             emit_words=True,
-        )
-        for sp in result:
-            out["doc_id"].append(doc_id)
-            out["seq"].append(sp.seq)
-            out["kind"].append(sp.kind)
-            out["text"].append(sp.text)
-            out["media_ref"].append(sp.media_ref)
-            out["offset"].append(sp.offset)
-            out["page"].append(sp.page)
-            out["para"].append(sp.para)
-            out["style_ref"].append(sp.style_ref)
-            out["words"].append(words_as_rows(sp.words))
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series(out["doc_id"], dtype="object"),
-            "seq": pd.Series(out["seq"], dtype="int32"),
-            "kind": pd.Series(out["kind"], dtype="object"),
-            "text": pd.Series(out["text"], dtype="object"),
-            "media_ref": pd.Series(out["media_ref"], dtype="object"),
-            "offset": pd.Series(out["offset"], dtype="int32"),
-            "page": pd.Series(out["page"], dtype="int32"),
-            "para": pd.Series(out["para"], dtype="int32"),
-            "style_ref": pd.Series(out["style_ref"], dtype="object"),
-            "words": pd.Series(out["words"], dtype="object"),
-        }
-    )
+        ))
+        for doc_id, spans in zip(inter["doc_id"], inter["spans"])
+    ], with_words=True)
 
 
 def _norm_words(cell) -> tuple:

@@ -13,51 +13,20 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np
-
 
 def structures_for_page(doc_id: str, spans, page: int, cfg):
     """Pure-Python path: tokenize + filter + analyze ONE page; returns
     render_page_svg inputs. `spans` is the collected spans array (list of
     Row/dict with kind/text/media_ref/offset)."""
-    from pdfextract_spark.engine.vectorized import (
-        _analyze_one_page,
-        _Glyphs,
-        _style_luts,
-    )
-    from pdfextract_spark.layout import doc_styles, layout_document
+    from pdfextract_spark.engine.vectorized import prepare_document
     from pdfextract_spark.operators.extract import _spans_to_lists
-    from pdfextract_spark.oracle.scanfilters import apply_scan_filters
     from pdfextract_spark.render import page_structures_for_render
 
-    kinds, texts, refs, offs = _spans_to_lists(spans)
-    order = np.argsort(np.asarray(offs, dtype=np.int64), kind="stable")
-    kinds = [kinds[i] for i in order]
-    texts = [texts[i] for i in order]
-    refs = [refs[i] for i in order]
-    offs = [int(offs[i]) for i in order]
-    table, media, styles = layout_document(doc_id, kinds, texts, refs, offs, cfg)
-    table = apply_scan_filters(table, styles, cfg)
-
-    mask = table.page == page
-    x, y, w, h = table.x[mask], table.y[mask], table.w[mask], table.h[mask]
-    g = _Glyphs(
-        x=x, y=y, w=w, h=h, ex=x + w, ey=y + h,
-        baseline=table.baseline[mask],
-        style=table.style_idx[mask],
-        text=[c for c, m in zip(table.char, mask) if m],
-        origin=table.offset[mask].astype(np.int64),
+    doc = prepare_document(doc_id, *_spans_to_lists(spans), cfg)
+    t, paragraphs, bounds, blocks, _captions = doc.analyze_page(page, cfg, "tuned")
+    return page_structures_for_render(
+        t, paragraphs, bounds, blocks, doc.media_by_page.get(page, [])
     )
-    page_media = sorted(
-        (m for m in media if m.page == page), key=lambda m: m.offset
-    )
-    cmp_lut, break_lut = _style_luts(styles)
-    sx = np.array([s.x_size for s in styles], dtype=np.int64)
-    sy = np.array([s.y_size for s in styles], dtype=np.int64)
-    t, paragraphs, bounds, blocks, _captions = _analyze_one_page(
-        g, page_media, cmp_lut, break_lut, sx, sy, cfg, "tuned"
-    )
-    return page_structures_for_render(t, paragraphs, bounds, blocks, page_media)
 
 
 def main(doc_id: str, page: int, sf_dir: str, out: str) -> None:
